@@ -2757,28 +2757,11 @@ def _q_stream_sessionize(spark, sf_dir):
         .trigger(availableNow=True)
         .start()
     )
-    # a stateful query with processing-time timeouts keeps scheduling
-    # (empty) micro-batches to evaluate timers, so availableNow never
-    # self-terminates (and processAllAvailable never settles): poll
-    # progress until the data batches have drained (a 0-input batch
-    # after input was seen), then stop. The 30-min timers cannot fire
-    # within the seconds this takes, so the emitted set is
-    # deterministic (exactly the gap-closed sessions).
-    import time as _time
-
-    deadline = _time.time() + 240
-    while _time.time() < deadline:
-        progs = q.recentProgress
-        if progs:
-            seen_data = any(p["numInputRows"] > 0 for p in progs)
-            if seen_data and progs[-1]["numInputRows"] == 0:
-                break
-        _time.sleep(0.5)
-    else:
-        q.stop()
+    # the 30-min timers cannot fire within the seconds the drain takes,
+    # so the emitted set is deterministic (exactly the gap-closed
+    # sessions)
+    if not SE.drain_and_stop(q, timeout_s=240):
         raise TimeoutError("stream_sessionize did not drain in 240s")
-    q.stop()
-    q.awaitTermination(60)
     return (
         spark.table(qname)
         .select(
@@ -5127,13 +5110,6 @@ def _web_parts(spark, sf_dir):
     )
 
 
-def _q_url_ops(spark, sf_dir):
-    """URL parse + canonicalization over synthesized messy URLs (see
-    _url_synth_col / _web_parts)."""
-    _prep(spark)
-    return _web_parts(spark, sf_dir).orderBy("doc_id")
-
-
 _URL_OPS_SQL = f"""
 WITH u AS (
   SELECT doc_id, {_URL_SYNTH_SQL} AS url FROM documents
@@ -5171,14 +5147,6 @@ def _host_rollup(parts):
         F.count(F.lit(1)).alias("n_docs"),
         F.count_distinct("path").alias("n_paths"),
     )
-
-
-def _q_host_stats(spark, sf_dir):
-    """Per-host rollup of the synthesized corpus URLs: doc count and
-    distinct paths (the boilerplate/mirror diversity signal) — ONE
-    uniformly-hashed groupBy on the host key (llm/web.py::host_stats)."""
-    _prep(spark)
-    return _host_rollup(_web_parts(spark, sf_dir)).orderBy("host")
 
 
 _HOST_STATS_SQL = f"""

@@ -26,7 +26,15 @@ from pyspark.sql.types import (
 )
 
 from ..geo import ops
-from ..geo.geography import Geography, KIND_MULTIPOLYGON, KIND_POLYGON, to_wkb
+from ..geo.geography import (
+    FLAG_EMPTY,
+    KIND_CELL_CENTER,
+    KIND_MULTIPOLYGON,
+    KIND_POLYGON,
+    Geography,
+    to_wkb,
+)
+from ..s2 import cellmath as cm
 from ..s2.coverer import covering_of_encoded
 from . import geoudfs as U
 
@@ -87,17 +95,36 @@ def s2_covering_fixed_level(geog, fixed_level: int) -> Column:
 
     @F.pandas_udf(ArrayType(LongType()))
     def _udf(s: pd.Series) -> pd.Series:
-        s = U.coerce_geog(s)
-        out = []
-        for b in s:
-            if b is None:
-                out.append(None)
-                continue
-            cells = covering_of_encoded(bytes(b), fixed_level=lev)
-            out.append([int(v) for v in cells.view(np.int64)])
-        return pd.Series(out, dtype=object)
+        return _fixed_level_cells(U.coerce_geog(s), lev)
 
     return _udf(_c(geog))
+
+
+def _fixed_level_cells(s: pd.Series, lev: int) -> pd.Series:
+    """Fixed-level covering of each encoded geography. Cell-center
+    blobs (points: the fact side of a point-in-polygon join) take one
+    vectorized ``cellmath.parent`` call per batch, read straight from
+    the blob header with no decode; the result equals
+    ``covering_of_geography``'s cell-center case (an invalid id is
+    empty, a valid one covers as its level-``lev`` ancestor)."""
+    out = [None] * len(s)
+    centers, cids = [], []
+    for i, b in enumerate(s):
+        if b is None:
+            continue
+        if b[0] == KIND_CELL_CENTER and len(b) >= 12:
+            centers.append(i)
+            empty = b[1] & FLAG_EMPTY or b[2:4] == b"\0\0"
+            cids.append(0 if empty else int.from_bytes(b[4:12], "little"))
+            continue
+        cells = covering_of_encoded(bytes(b), fixed_level=lev)
+        out[i] = [int(v) for v in cells.view(np.int64)]
+    if centers:
+        ids = np.array(cids, dtype=np.uint64)
+        up = cm.parent(ids, lev).view(np.int64).tolist()
+        for i, ok, c in zip(centers, cm.is_valid(ids).tolist(), up):
+            out[i] = [c] if ok else []
+    return pd.Series(out, dtype=object)
 
 
 @F.pandas_udf(BOX_SCHEMA)
@@ -291,8 +318,8 @@ def _rect_fold(rects) -> tuple:
     return rect
 
 
-@F.pandas_udf(ArrayType(DoubleType()), F.PandasUDFType.GROUPED_AGG)  # type: ignore[call-overload]
-def _bounds_box_agg_arr(s: pd.Series):
+@F.pandas_udf(ArrayType(DoubleType()))
+def _bounds_box_agg_arr(s: pd.Series) -> list:
     # Blob-input form, kept for the SQL surface (spark.sql can't
     # compose scalar + aggregate in one registration). The Python API
     # below projects per-row boxes map-side instead — prefer it.
@@ -305,8 +332,8 @@ def _bounds_box_agg_arr(s: pd.Series):
     return list(rect)
 
 
-@F.pandas_udf(ArrayType(DoubleType()), F.PandasUDFType.GROUPED_AGG)  # type: ignore[call-overload]
-def _bounds_box_agg_boxes(s: pd.Series):
+@F.pandas_udf(ArrayType(DoubleType()))
+def _bounds_box_agg_boxes(s: pd.Series) -> list:
     # Box-input reduce: each row is [xmin, ymin, xmax, ymax]. The
     # latitude union is a plain min/max (vectorized); the longitude
     # union is the wrap-aware S1Interval fold.

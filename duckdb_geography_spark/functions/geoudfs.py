@@ -13,6 +13,7 @@ of a spatial join cheap here.
 from __future__ import annotations
 
 import os
+import threading
 from collections import OrderedDict
 from typing import Callable, Optional
 
@@ -41,7 +42,7 @@ class ByteBudgetLRU:
         self,
         budget_bytes: int,
         cost_fn: Callable[[bytes], int],
-        load: Callable[[bytes], object],
+        load: Optional[Callable[[bytes], object]] = None,
         charge_value: bool = False,
     ):
         self.budget = int(budget_bytes)
@@ -54,37 +55,64 @@ class ByteBudgetLRU:
         self.charge_value = charge_value
         self._d: OrderedDict = OrderedDict()
         self._cost: dict = {}
+        # the driver-side cache (dim_coverings) may be used by several
+        # query-building threads at once
+        self._lock = threading.Lock()
         self.total = 0
         self.hits = 0
         self.misses = 0
 
     def __call__(self, buf: bytes):
-        d = self._d
-        val = d.get(buf)
-        if val is not None:
+        val = self.get(buf)
+        if val is None:
+            val = self.load(buf)
+            self.put(buf, val)
+        return val
+
+    def get(self, key):
+        """The cached value (refreshed), or None on a miss."""
+        with self._lock:
+            val = self._d.get(key)
+            if val is None:
+                self.misses += 1
+                return None
             self.hits += 1
-            d.move_to_end(buf)
+            self._d.move_to_end(key)
             return val
-        self.misses += 1
-        val = self.load(buf)
-        cost = self.cost_fn(val if self.charge_value else buf)
-        if cost <= self.budget:  # oversized values are computed, not cached
-            d[buf] = val
-            self._cost[buf] = cost
+
+    def put(self, key, val) -> None:
+        cost = self.cost_fn(val if self.charge_value else key)
+        with self._lock:
+            d = self._d
+            if cost > self.budget or key in d:  # oversized values are not cached
+                return
+            d[key] = val
+            self._cost[key] = cost
             self.total += cost
             while self.total > self.budget and d:
                 old, _ = d.popitem(last=False)
                 self.total -= self._cost.pop(old)
-        return val
 
     def cache_clear(self) -> None:
-        self._d.clear()
-        self._cost.clear()
-        self.total = 0
-        self.hits = self.misses = 0
+        with self._lock:
+            self._d.clear()
+            self._cost.clear()
+            self.total = 0
+            self.hits = self.misses = 0
 
     def __len__(self) -> int:
         return len(self._d)
+
+    # a pandas UDF pickled by value carries the caches its body names
+    # (casts._cell_union_geog_bytes); the lock does not pickle
+    def __getstate__(self):
+        state = self.__dict__.copy()
+        del state["_lock"]
+        return state
+
+    def __setstate__(self, state):
+        self.__dict__.update(state)
+        self._lock = threading.Lock()
 
 
 _CACHE_BUDGET = int(os.environ.get("SPARK_GRAFT_GEOG_CACHE_MB", "256")) * (1 << 20)
@@ -113,13 +141,14 @@ parts_cached = ByteBudgetLRU(
 )
 
 
-def decode_series(s: pd.Series):
-    """bytes Series -> list of Geography (None stays None)."""
-    return [decode_cached(bytes(b)) if b is not None else None for b in s]
-
-
-def encode_list(geogs) -> pd.Series:
-    return pd.Series([g.encode() if g is not None else None for g in geogs], dtype=object)
+#: Fixed-level coverings of broadcast dimension rows, held by the DRIVER
+#: for the whole application (joins.covering_join's broadcast path):
+#: keyed by ``(level, BLAKE2b-160 digest of the geography value)``, so
+#: an entry holds no blob, and charged by the covering's size. A
+#: dimension shared by many queries is covered once.
+dim_coverings = ByteBudgetLRU(
+    _CACHE_BUDGET, lambda cells: cells.nbytes + 256, charge_value=True
+)
 
 
 def float_series(values) -> pd.Series:
@@ -135,12 +164,6 @@ def float_series(values) -> pd.Series:
 
     arr = pa.array(list(values), type=pa.float64(), from_pandas=False)
     return pd.Series(pd.arrays.ArrowExtensionArray(arr))
-
-
-def tag_kind(s: pd.Series) -> np.ndarray:
-    """kind byte per row without decoding (tag-only fast path,
-    reference: s2_geography_serde.hpp:17-20)."""
-    return np.array([b[0] if b is not None else -1 for b in s], dtype=np.int64)
 
 
 def tag_is_empty(s: pd.Series):

@@ -503,22 +503,6 @@ def _parts_min_angle(a: "_Parts", b: "_Parts") -> float:
     return best
 
 
-def _min_angle_point_to_parts(x: np.ndarray, parts: "_Parts") -> float:
-    """Min angle from a point to all components of a parts set."""
-    best = INF
-    if parts.poly_contains(x):
-        return 0.0
-    if len(parts.points):
-        best = min(best, float(np.min(gd.angle(np.broadcast_to(x, parts.points.shape), parts.points))))
-    oe = parts.edge_arrays()
-    if oe is not None:
-        best = min(best, gd.points_segments_min_angle(x[None, :], oe[0], oe[1]))
-    degv = parts.degenerate_line_vertices()
-    if len(degv):
-        best = min(best, float(np.min(gd.angle(x[None, :], degv))))
-    return best
-
-
 def max_distance(g1: Geography, g2: Geography) -> float:
     """Max geodesic distance in meters; empty -> inf
     (src/s2_binary_index_ops.cpp:571-615).
@@ -657,13 +641,6 @@ def difference(g1: Geography, g2: Geography) -> Geography:
     if contains(g2, g1):
         return Geography(KIND_COLLECTION)
     return _general_overlay(g1, g2, "difference")
-
-
-def _ccw_shell_xyz(ring_lonlat: np.ndarray) -> np.ndarray:
-    xyz = gd.lonlat_deg_to_xyz(ring_lonlat)
-    if gd.ring_signed_area(xyz) < 0:
-        xyz = xyz[::-1]
-    return xyz
 
 
 def _decompose_xyz(g: Geography):

@@ -11,6 +11,10 @@ module restructures every spatial join as a **covering equi-join**:
       -> dropDuplicates on the pair keys
       -> exact predicate refine (Arrow-batched UDF)
 
+A small dimension side is instead collected once, covered once per
+application (driver-side cache), and broadcast as ``(row, cell)``
+longs; see :func:`covering_join`.
+
 Properties at scale: the join is a plain equi-join (AQE can re-plan
 it, skew-split it, or broadcast the small side); the refine UDF only
 sees candidate pairs (covering prefilter parity with the reference's
@@ -21,6 +25,7 @@ Python).
 
 from __future__ import annotations
 
+import hashlib
 import math
 import os
 import sys
@@ -29,9 +34,10 @@ from typing import Optional
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, LongType
+from pyspark.sql.types import ArrayType, LongType, StructField, StructType
 
 from .functions import cells as C
 from .functions import predicates as P
@@ -84,6 +90,15 @@ def level_for_radius_meters(meters: float) -> int:
 BROADCAST_RIGHT_MAX_ROWS = 100_000
 
 
+def _warn_fallback(what: str, cap: int, stacklevel: int) -> None:
+    warnings.warn(
+        f"{what}: broadcast_right requested but the right side has "
+        f"> {cap} rows; falling back to a shuffle equi-join (a forced "
+        f"broadcast of a data-sized table risks executor OOM)",
+        stacklevel=stacklevel + 1,
+    )
+
+
 def _guarded_broadcast(
     exploded: DataFrame, base: DataFrame, what: str, max_rows: int = 0
 ) -> DataFrame:
@@ -97,13 +112,155 @@ def _guarded_broadcast(
     n = base.limit(cap + 1).count()
     if n <= cap:
         return F.broadcast(exploded)
-    warnings.warn(
-        f"{what}: broadcast_right requested but the right side has "
-        f"> {cap} rows; falling back to a shuffle equi-join (a forced "
-        f"broadcast of a data-sized table risks executor OOM)",
-        stacklevel=3,
-    )
+    _warn_fallback(what, cap, stacklevel=3)
     return exploded
+
+
+def _rename_right(left_cols, right: DataFrame, right_geog: str, left_geog: str,
+                  rk: Optional[str] = None):
+    """The output rename contract: the right geography becomes
+    ``<right_geog>_r`` when it shares the left's name, and every other
+    right column whose name the left also has gains ``_r``. Returns
+    the renamed frame and the new names of the geography and ``rk``."""
+    rgeog_out = right_geog if right_geog != left_geog else right_geog + "_r"
+    r_renamed = right.withColumnRenamed(right_geog, rgeog_out)
+    for col in set(left_cols) & set(r_renamed.columns):
+        r_renamed = r_renamed.withColumnRenamed(col, col + "_r")
+        if rk == col:
+            rk = col + "_r"
+        if rgeog_out == col:
+            rgeog_out = col + "_r"
+    return r_renamed, rgeog_out, rk
+
+
+def _probe_dim(right: DataFrame, cap: int):
+    """The right side's size, and its rows when it fits ``cap``, in ONE
+    bounded job: ``limit(cap+1)``, then ``count(*)`` and, only when
+    the count is within the cap, ``collect_list(struct(*))``. Returns
+    ``(n, table)``: ``n`` counts at most ``cap + 1`` rows, and
+    ``table`` is the right side as an Arrow table, or None over the
+    cap, when no row reaches the driver. ``coalesce(1)`` keeps the
+    probe to one task with no exchange (an exchange would make the
+    adaptive planner run a second job); a right side whose rows are
+    costly to compute is computed by that one task, so cache it."""
+    n = F.count(F.lit(1))
+    got = (
+        right.coalesce(1)
+        .limit(cap + 1)
+        .agg(n.alias("n"), F.when(n <= cap, F.collect_list(F.struct("*"))).alias("rows"))
+        .toArrow()
+    )
+    count = got["n"][0].as_py()
+    if count > cap:
+        return count, None
+    return count, pa.Table.from_struct_array(got["rows"][0].values)
+
+
+def _dim_key(value, level: int):
+    """Cache key of one dimension geography: the level and a 160-bit
+    BLAKE2b digest of its value (bytes, or a cell id / cell union)."""
+    raw = value if isinstance(value, bytes) else repr(value).encode()
+    return level, hashlib.blake2b(raw, digest_size=20).digest()
+
+
+def _dim_coverings(spark, geog: pa.ChunkedArray, gtype, level: int) -> list:
+    """Level-``level`` covering (int64 cell ids) of every dimension row,
+    from the application's :data:`~.functions.geoudfs.dim_coverings`
+    cache. The values the cache lacks are covered together in ONE
+    parallel job over a driver-built relation, largest value first,
+    dealt round-robin so each task gets a like share of the vertices.
+    NULL rows cover to nothing."""
+    vals = geog.to_pylist()
+    out = [np.empty(0, dtype=np.int64)] * len(vals)
+    todo: dict = {}
+    for i, v in enumerate(vals):
+        if v is None:
+            continue
+        key = _dim_key(v, level)
+        cells = U.dim_coverings.get(key)
+        if cells is None:
+            todo.setdefault(key, []).append(i)
+        else:
+            out[i] = cells
+    if not todo:
+        return out
+    keys = list(todo)
+    par = min(len(keys), spark.sparkContext.defaultParallelism)
+    size = [len(vals[todo[k][0]]) if isinstance(vals[todo[k][0]], bytes) else 0 for k in keys]
+    order = sorted(range(len(keys)), key=lambda j: -size[j])
+    order = [j for s in range(par) for j in order[s::par]]
+    src = pa.table({
+        "__k": pa.array(order, pa.int64()),
+        "__g": geog.take([todo[keys[j]][0] for j in order]),
+    })
+    schema = StructType([StructField("__k", LongType()), StructField("__g", gtype)])
+    res = (
+        spark.createDataFrame(src, schema)
+        .select("__k", s2_covering_fixed_level("__g", level).alias("__c"))
+        .toArrow()
+    )
+    for j, cells in zip(res["__k"].to_pylist(), res["__c"].to_pylist()):
+        arr = np.asarray(cells, dtype=np.int64)
+        U.dim_coverings.put(keys[j], arr)
+        for i in todo[keys[j]]:
+            out[i] = arr
+    return out
+
+
+def _dim_covering_join(
+    left: DataFrame,
+    right_schema: StructType,
+    dim: pa.Table,
+    predicate: str,
+    level: int,
+    left_geog: str,
+    right_geog: str,
+    left_key: Optional[str],
+) -> DataFrame:
+    """The broadcast form of :func:`covering_join` over a right side
+    already collected by :func:`_probe_dim`. Two driver-built local
+    relations are broadcast: ``(__ri, __cell)`` longs, one row per
+    covering cell of right row ``__ri``, and ``(__ri, <right
+    columns>)``, one row per right row. Candidates are deduplicated on
+    ``(left key, __ri)`` behind an explicit hash repartition over the
+    default parallelism (a key-only exchange the adaptive planner
+    would otherwise coalesce to one partition, and so run the refine
+    in one task), then the right columns are joined back by ``__ri``
+    and the exact predicate refines."""
+    spark = left.sparkSession
+    refine = _PREDICATES[predicate]
+    lk_df, lk, lk_synth = _with_key(left, left_key, "__lkey")
+
+    ri = pa.array(np.arange(dim.num_rows, dtype=np.int64))
+    rows = spark.createDataFrame(
+        dim.add_column(0, "__ri", ri),
+        StructType([StructField("__ri", LongType(), False)] + right_schema.fields),
+    )
+    rows, rgeog_out, _ = _rename_right(lk_df.columns, rows, right_geog, left_geog)
+
+    covs = _dim_coverings(spark, dim.column(right_geog), right_schema[right_geog].dataType, level)
+    counts = np.fromiter((len(c) for c in covs), dtype=np.int64, count=len(covs))
+    cells = spark.createDataFrame(
+        pa.table({
+            "__ri": np.repeat(ri.to_numpy(), counts),
+            "__cell": np.concatenate([np.empty(0, dtype=np.int64), *covs]),
+        }),
+        "__ri long, __cell long",
+    )
+
+    l_cells = lk_df.withColumn(
+        "__cell", F.explode(s2_covering_fixed_level(left_geog, level))
+    )
+    cand = (
+        l_cells.join(F.broadcast(cells), "__cell")
+        .drop("__cell")
+        .repartition(spark.sparkContext.defaultParallelism, lk, "__ri")
+        .dropDuplicates([lk, "__ri"])
+    )
+    pairs = cand.join(F.broadcast(rows), "__ri")
+    if refine is not None:
+        pairs = pairs.where(refine(F.col(left_geog), F.col(rgeog_out)))
+    return pairs.drop("__ri", *([lk] if lk_synth else []))
 
 
 def _with_key(df: DataFrame, key: Optional[str], name: str):
@@ -140,23 +297,42 @@ def covering_join(
     covering equi-join + exact refine.
 
     Returns left columns + right columns (right geog renamed
-    ``<right_geog>_r`` if it collides). ``broadcast_right`` hints the
-    planner when the right side is a small dimension table.
+    ``<right_geog>_r`` if it collides, and any other right column the
+    left also has renamed ``<name>_r``).
+
+    ``broadcast_right=True`` declares the right side a small dimension
+    table. One bounded probe job collects it to the driver (at most
+    :data:`BROADCAST_RIGHT_MAX_ROWS` rows; a larger right side is never
+    collected and the join falls back to the shuffle form below, with
+    a warning). Each right row's level-``level`` covering then comes
+    from an application-wide driver cache keyed by the geography's
+    bytes and the level, and the rows the cache lacks are covered
+    together in one parallel job — so a dimension shared by many
+    queries is covered once. What is broadcast is ``(row, cell)``
+    longs plus one copy of each right row, never a geography per
+    cell. Candidates are deduplicated per (left row, right row), so
+    with a unique ``left_key`` (or none) the rows are those of the
+    shuffle form; ``right_key`` is not needed on this path.
+
+    Without the hint both sides explode their coverings and meet in a
+    shuffle equi-join on the cell, deduplicated on
+    (``left_key``, ``right_key``).
     """
-    refine = _PREDICATES[predicate] if predicate != "mayintersect" else None
+    refine = _PREDICATES[predicate]
+    if broadcast_right:
+        cap = BROADCAST_RIGHT_MAX_ROWS
+        _, dim = _probe_dim(right, cap)
+        if dim is not None:
+            return _dim_covering_join(
+                left, right.schema, dim, predicate, level, left_geog, right_geog, left_key
+            )
+        _warn_fallback("covering_join", cap, stacklevel=2)
 
     lk_df, lk, lk_synth = _with_key(left, left_key, "__lkey")
     rk_df, rk, rk_synth = _with_key(right, right_key, "__rkey")
-
-    rgeog_out = right_geog if right_geog != left_geog else right_geog + "_r"
-    r_renamed = rk_df.withColumnRenamed(right_geog, rgeog_out)
-    overlap = set(lk_df.columns) & set(r_renamed.columns)
-    for col in overlap:
-        r_renamed = r_renamed.withColumnRenamed(col, col + "_r")
-        if rk == col:
-            rk = col + "_r"
-        if rgeog_out == col:
-            rgeog_out = col + "_r"
+    r_renamed, rgeog_out, rk = _rename_right(
+        lk_df.columns, rk_df, right_geog, left_geog, rk
+    )
 
     l_cells = lk_df.withColumn(
         "__cell", F.explode(s2_covering_fixed_level(left_geog, level))
@@ -164,8 +340,6 @@ def covering_join(
     r_cells = r_renamed.withColumn(
         "__cell", F.explode(s2_covering_fixed_level(rgeog_out, level))
     )
-    if broadcast_right:
-        r_cells = _guarded_broadcast(r_cells, rk_df, "covering_join")
 
     pairs = l_cells.join(r_cells, "__cell").drop("__cell")
     pairs = pairs.dropDuplicates([lk, rk])
@@ -253,20 +427,13 @@ def covering_range_join(
     """
     if left_level < coarse_level:
         raise ValueError("left_level must be >= coarse_level")
-    refine = _PREDICATES[predicate] if predicate != "mayintersect" else None
+    refine = _PREDICATES[predicate]
 
     lk_df, lk, lk_synth = _with_key(left, left_key, "__lkey")
     rk_df, rk, rk_synth = _with_key(right, right_key, "__rkey")
-
-    rgeog_out = right_geog if right_geog != left_geog else right_geog + "_r"
-    r_renamed = rk_df.withColumnRenamed(right_geog, rgeog_out)
-    overlap = set(lk_df.columns) & set(r_renamed.columns)
-    for col in overlap:
-        r_renamed = r_renamed.withColumnRenamed(col, col + "_r")
-        if rk == col:
-            rk = col + "_r"
-        if rgeog_out == col:
-            rgeog_out = col + "_r"
+    r_renamed, rgeog_out, rk = _rename_right(
+        lk_df.columns, rk_df, right_geog, left_geog, rk
+    )
 
     l_cells = lk_df.withColumn(
         "__lcell", F.explode(s2_covering_fixed_level(left_geog, left_level))
@@ -397,16 +564,9 @@ def distance_join(
 
     lk_df, lk, lk_synth = _with_key(left, left_key, "__lkey")
     rk_df, rk, rk_synth = _with_key(right, right_key, "__rkey")
-
-    rgeog_out = right_geog if right_geog != left_geog else right_geog + "_r"
-    r_renamed = rk_df.withColumnRenamed(right_geog, rgeog_out)
-    overlap = set(lk_df.columns) & set(r_renamed.columns)
-    for col in overlap:
-        r_renamed = r_renamed.withColumnRenamed(col, col + "_r")
-        if rk == col:
-            rk = col + "_r"
-        if rgeog_out == col:
-            rgeog_out = col + "_r"
+    r_renamed, rgeog_out, rk = _rename_right(
+        lk_df.columns, rk_df, right_geog, left_geog, rk
+    )
 
     l_cells = lk_df.withColumn(
         "__cell", F.explode(s2_covering_fixed_level(left_geog, level))
@@ -1143,23 +1303,27 @@ def spatial_join(
 ) -> DataFrame:
     """Strategy-picking spatial join — SURVEY §4.3's "auto-rewrite
     rule" expressed the way PySpark can: a driver-side planner that
-    probes the right side's size (bounded ``limit(n+1).count()``, an
-    eager action like the quadratic-baseline guards) and picks the
-    physical form:
+    probes the right side (ONE bounded job: ``limit(n+1)``, counted,
+    and collected to the driver only when it fits the broadcast cap)
+    and picks the physical form:
 
     - right has <= ``nl_rows`` rows -> ``broadcast_spatial_join``
       (broadcast nested-loop over the exact predicate: for a handful
       of prepared geographies the per-row probe beats paying the
       covering explode of the big side's every row);
-    - right fits the broadcast threshold -> ``covering_join`` with
-      ``broadcast_right=True`` (covering equi-join, broadcast hash);
+    - right fits the broadcast cap (``broadcast_rows``, at most
+      :data:`BROADCAST_RIGHT_MAX_ROWS`) -> ``covering_join``'s
+      broadcast form, fed the rows the probe collected: each right
+      row's covering comes from the application-wide covering cache
+      (misses covered in one parallel job), and ``(row, cell)`` longs
+      plus one copy of each right row are broadcast;
     - otherwise -> plain ``covering_join`` (shuffle hash equi-join;
       AQE re-plans/skew-splits at runtime);
     - ``planet_scale_right=True`` (hemisphere-sized geographies whose
       fixed-level covering would overflow) -> ``covering_range_join``,
       the range_min/range_max BETWEEN form.
 
-    The probe never scans more than ``broadcast_rows + 1`` rows. At
+    The probe never reads more than ``broadcast_rows + 1`` rows. At
     100 TB the decision this makes is exactly the one a Catalyst rule
     would: equi-join shape always, broadcast when the dim side allows,
     NL only when the dim is so small the prefilter costs more than it
@@ -1174,19 +1338,20 @@ def spatial_join(
             left_key=left_key,
             right_key=right_key,
         )
-    n_right = right.limit(broadcast_rows + 1).count()
+    cap = min(broadcast_rows, BROADCAST_RIGHT_MAX_ROWS)
+    n_right, dim = _probe_dim(right, cap)
     if n_right <= nl_rows and predicate in ("intersects", "contains"):
         refine = _PREDICATES[predicate]
-        rgeog_out = right_geog if right_geog != left_geog else right_geog + "_r"
-        r = right.withColumnRenamed(right_geog, rgeog_out)
-        overlap = set(left.columns) & set(r.columns)
-        for col in overlap:
-            r = r.withColumnRenamed(col, col + "_r")
-            if rgeog_out == col:
-                rgeog_out = col + "_r"
+        r, rgeog_out, _ = _rename_right(left.columns, right, right_geog, left_geog)
         return broadcast_spatial_join(
             left, r, refine(F.col(left_geog), F.col(rgeog_out)), geog_col=rgeog_out
         )
+    if dim is not None:
+        return _dim_covering_join(
+            left, right.schema, dim, predicate, level, left_geog, right_geog, left_key
+        )
+    if broadcast_rows > cap:
+        _warn_fallback("covering_join", cap, stacklevel=2)
     return covering_join(
         left,
         right,
@@ -1196,7 +1361,6 @@ def spatial_join(
         right_geog=right_geog,
         left_key=left_key,
         right_key=right_key,
-        broadcast_right=n_right <= broadcast_rows,
     )
 
 

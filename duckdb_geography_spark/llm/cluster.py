@@ -171,7 +171,9 @@ def _lloyd_partials_kernel(cents: np.ndarray, quant: int = _Q):
             assign = np.argmax(X @ C.T, axis=1)
             norm = np.sqrt(np.cumsum(X * X, axis=1)[:, -1])
             Q = np.zeros(X.shape, dtype=np.int64)
-            nz = norm != 0.0
+            # NaN/inf norms (a NaN, NULL or inf element) quantize to 0
+            # like the JVM form; floor(NaN) would cast to INT64_MIN
+            nz = np.isfinite(norm) & (norm != 0.0)
             if nz.any():
                 Q[nz] = np.floor(
                     X[nz] / norm[nz, None] * fquant + 0.5

@@ -537,30 +537,6 @@ def _fixed_level_covering(region: _GeogRegion, level: int, cap: int = 16384) -> 
     return np.unique(frontier)
 
 
-def _adaptive_covering(region: _GeogRegion, max_cells: int) -> np.ndarray:
-    """Greedy subdivision: repeatedly split the largest cell while the
-    result still fits in max_cells (children tested in one batch)."""
-    faces = np.array(_FACE_CELLS, dtype=np.uint64)
-    cells = [U64(c) for c in faces[region.may_intersect_batch(faces)]]
-    while True:
-        levels = cm.level(np.array(cells, dtype=np.uint64))
-        order = np.argsort(levels, kind="stable")
-        split_done = False
-        for idx in order:
-            c = cells[idx]
-            if levels[idx] >= 30:
-                continue
-            kids = _children_batch(np.array([c], dtype=np.uint64))
-            kids = kids[region.may_intersect_batch(kids)]
-            if len(cells) - 1 + len(kids) <= max_cells and len(kids):
-                cells = [x for i, x in enumerate(cells) if i != idx] + [U64(k) for k in kids]
-                split_done = True
-                break
-        if not split_done:
-            break
-    return normalize_cell_union(np.array(cells, dtype=np.uint64))
-
-
 def _rect_cap_bound(rect):
     """(xmin, ymin, xmax, ymax) degrees -> (center_xyz, radius_rad),
     following S2LatLngRect::GetCapBound."""

@@ -10,6 +10,7 @@ and a stateful sessionizer via applyInPandasWithState.
 from __future__ import annotations
 
 import datetime as dt
+import time
 from typing import Iterator, Tuple
 
 import pandas as pd
@@ -31,6 +32,7 @@ __all__ = [
     "cell_rollup_stream",
     "sessionize",
     "sessionize_batch",
+    "drain_and_stop",
     "stream_dedup",
     "read_documents_stream",
     "collect_benchmark_grams",
@@ -254,6 +256,36 @@ def sessionize(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
             timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
         )
     )
+
+
+def drain_and_stop(query, timeout_s: float = 240.0) -> bool:
+    """Wait until an ``availableNow`` query has processed all the input
+    available at its start, then stop it; True if it drained.
+
+    A stateful query with processing-time timeouts (:func:`sessionize`)
+    keeps scheduling empty micro-batches to evaluate its timers, so
+    ``availableNow`` never ends it and ``processAllAvailable`` never
+    settles. This polls the query's progress until a batch with no
+    input follows one with input, or until the query ends by itself
+    (re-raising its failure). The query is stopped either way; False
+    means ``timeout_s`` passed first."""
+    deadline = time.time() + timeout_s
+    drained = False
+    while time.time() < deadline:
+        if not query.isActive:
+            query.awaitTermination()  # raises the query's failure, if any
+            drained = True
+            break
+        progs = query.recentProgress
+        if progs and progs[-1]["numInputRows"] == 0 and any(
+            p["numInputRows"] > 0 for p in progs
+        ):
+            drained = True
+            break
+        time.sleep(0.5)
+    query.stop()
+    query.awaitTermination(60)
+    return drained
 
 
 def sessionize_batch(

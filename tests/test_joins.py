@@ -728,3 +728,228 @@ class TestKnnJoin:
         got3 = J.knn_join(left, empty_right, k=2, left_key="a", right_key="b")
         assert got3.count() == 0
         assert "knn_rank" in got3.columns and "knn_distance" in got3.columns
+
+
+# ---------------------------------------------------------------------------
+# covering_join's broadcast form: the dimension is collected by one probe,
+# covered once per application, and broadcast as (row, cell) longs
+# ---------------------------------------------------------------------------
+
+DIM_COUNTRIES = (
+    "Chile", "Italy", "Japan", "Egypt", "Fiji", "Norway",
+    "Madagascar", "New Zealand", "Peru", "Germany", "France", "Mexico",
+)
+
+
+@pytest.fixture(scope="module")
+def dim_sample(spark):
+    """A few bundled countries (more than spatial_join's nl_rows, so it
+    takes the covering join) as a driver-built frame like a cached
+    dimension, and 600 seeded points: half inside the countries'
+    bounding boxes, half uniform on the sphere."""
+    import numpy as np
+
+    from duckdb_geography_spark.functions import casts, cells
+    from duckdb_geography_spark.geo import ops
+    from duckdb_geography_spark.geo.geography import Geography
+
+    rows = (
+        D.s2_data_countries(spark)
+        .where(F.col("name").isin(*DIM_COUNTRIES))
+        .select("name", "geog")
+        .collect()
+    )
+    blobs = [(r["name"], bytes(r["geog"])) for r in rows]
+    assert len(blobs) == len(DIM_COUNTRIES)
+    dim = spark.createDataFrame(blobs, "name string, geog binary")
+    decoded = [(n, Geography.decode(b)) for n, b in blobs]
+
+    rng = np.random.default_rng(20261018)
+    lon, lat = [], []
+    for _, g in decoded:
+        xmin, ymin, xmax, ymax = ops.bounds_rect(g)
+        span = (xmax - xmin) % 360.0 or 360.0
+        lon.append((xmin + rng.uniform(0, span, 25) + 180.0) % 360.0 - 180.0)
+        lat.append(rng.uniform(ymin, ymax, 25))
+    n_uni = 600 - 25 * len(decoded)
+    lon.append(rng.uniform(-180.0, 180.0, n_uni))
+    lat.append(np.degrees(np.arcsin(rng.uniform(-1.0, 1.0, n_uni))))
+    lon, lat = np.concatenate(lon), np.concatenate(lat)
+    pts = spark.createDataFrame(
+        [(i, float(x), float(y)) for i, (x, y) in enumerate(zip(lon, lat))],
+        "pid long, lon double, lat double",
+    ).select(
+        "pid",
+        casts.s2_cell_center_to_geography(cells.s2_cellfromlonlat("lon", "lat")).alias("geog"),
+    )
+    from duckdb_geography_spark.s2 import cellmath as cm
+
+    truth = set()
+    for pid, c in enumerate(cm.lonlat_to_cellid(lon, lat).tolist()):
+        pt = Geography.cell_center(np.uint64(c))
+        truth |= {(pid, n) for n, g in decoded if ops.intersects(pt, g)}
+    assert len(truth) > 100
+    return pts, dim, truth
+
+
+def _plan_nodes(df):
+    """Every node of the executed physical plan, through adaptive
+    wrappers and query stages."""
+    stack, out = [df._jdf.queryExecution().executedPlan()], []
+    while stack:
+        p = stack.pop()
+        out.append(p)
+        cls = p.getClass().getSimpleName()
+        if cls == "AdaptiveSparkPlanExec":
+            stack.append(p.executedPlan())
+        elif cls.endswith("QueryStageExec"):
+            stack.append(p.plan())
+        kids = p.children()
+        stack.extend(kids.apply(i) for i in range(kids.size()))
+    return out
+
+
+def _broadcasts(df):
+    """(output columns as {name: type}, python-eval inside?) of each
+    BroadcastExchange of the executed plan."""
+    out = []
+    for node in _plan_nodes(df):
+        if node.getClass().getSimpleName() != "BroadcastExchangeExec":
+            continue
+        attrs = node.output()
+        cols = {
+            attrs.apply(i).name(): attrs.apply(i).dataType().typeName()
+            for i in range(attrs.size())
+        }
+        out.append((cols, "EvalPython" in node.toString()))
+    return out
+
+
+def test_dim_join_level8_matches_brute_force(spark, dim_sample):
+    pts, dim, truth = dim_sample
+    got = J.spatial_join(pts, dim, left_key="pid", right_key="name")
+    assert got.columns == ["pid", "geog", "name", "geog_r"]
+    rows = got.select("pid", "name").collect()
+    assert len(rows) == len(truth)  # one row per matching pair
+    assert {(r["pid"], r["name"]) for r in rows} == truth
+    # the same without any key: the pair dedup uses internal row ids
+    nokey = J.spatial_join(pts, dim).select("pid", "name").collect()
+    assert sorted(map(tuple, nokey)) == sorted(map(tuple, rows))
+
+
+def test_dim_join_broadcasts_only_longs(spark, dim_sample):
+    pts, dim, truth = dim_sample
+    got = J.spatial_join(pts, dim, left_key="pid", right_key="name")
+    assert got.count() == len(truth)  # executes, so the plan is final
+    bcasts = _broadcasts(got)
+    cell_side = [cols for cols, _ in bcasts if "__cell" in cols]
+    assert cell_side == [{"__ri": "long", "__cell": "long"}]
+    # neither broadcast runs a covering (or any Python) UDF
+    assert bcasts and not any(py for _, py in bcasts)
+    # the candidate dedup keeps its explicit partition count, so the
+    # refine after it runs in parallel tasks
+    plan = got._jdf.queryExecution().executedPlan().toString()
+    assert "REPARTITION_BY_NUM" in plan
+
+
+def test_second_dim_join_one_job_no_right_covering(spark, dim_sample):
+    from duckdb_geography_spark.functions import geoudfs as U
+
+    pts, dim, _ = dim_sample
+    J.spatial_join(pts, dim, left_key="pid", right_key="name")  # warm the cache
+    sc = spark.sparkContext
+    misses, total = U.dim_coverings.misses, U.dim_coverings.total
+    sc.setJobGroup("dim-join-rebuild", "second spatial_join over one dimension")
+    try:
+        got = J.spatial_join(pts, dim, left_key="pid", right_key="name")
+    finally:
+        sc._jsc.clearJobGroup()
+    assert len(sc.statusTracker().getJobIdsForGroup("dim-join-rebuild")) == 1
+    assert U.dim_coverings.misses == misses and U.dim_coverings.total == total
+    # the right side's only covering is the cached one: no Python UDF
+    # feeds either broadcast
+    got.count()
+    assert not any(py for _, py in _broadcasts(got))
+
+
+def test_dim_join_mayintersect_matches_shuffle_form(spark, dim_sample):
+    """The broadcast form's candidates equal the shuffle form's (the
+    unchanged two-sided explode), columns and renames included."""
+    pts, dim, _ = dim_sample
+    left = pts.withColumn("name", F.lit("pt"))  # collides with the dim's name
+    kw = dict(predicate="mayintersect", level=6, left_key="pid", right_key="name")
+    bc = J.covering_join(left, dim, broadcast_right=True, **kw)
+    sh = J.covering_join(left, dim, broadcast_right=False, **kw)
+    assert bc.columns == sh.columns == ["pid", "geog", "name", "name_r", "geog_r"]
+    got = sorted((r["pid"], r["name_r"]) for r in bc.collect())
+    want = sorted((r["pid"], r["name_r"]) for r in sh.collect())
+    assert got == want and len(got) > 0
+
+
+def test_dim_join_edge_rows_match_shuffle_form(spark, dim_sample):
+    """Repeated and NULL geographies, an empty dimension, and right
+    columns of other types survive the trip through the driver."""
+    import datetime as dt
+    import decimal
+
+    pts, dim, _ = dim_sample
+    geogs = [r["geog"] for r in dim.orderBy("name").limit(2).collect()]
+    rows = [
+        (i, g, dt.datetime(2024, 3, 31, 1, 30) + dt.timedelta(hours=i),
+         ["a", str(i)], decimal.Decimal(f"{i}.25"))
+        for i, g in enumerate([geogs[0], geogs[0], geogs[1], None, geogs[0]])
+    ]
+    schema = "rid long, geog binary, ts timestamp, tags array<string>, d decimal(10,2)"
+    right = spark.createDataFrame(rows, schema)
+    kw = dict(level=6, left_key="pid", right_key="rid")
+    bc = J.covering_join(pts, right, broadcast_right=True, **kw)
+    sh = J.covering_join(pts, right, broadcast_right=False, **kw)
+    assert bc.columns == sh.columns
+    assert bc.schema == sh.schema
+    got, want = sorted(map(tuple, bc.collect())), sorted(map(tuple, sh.collect()))
+    assert got == want and {r[2] for r in got} == {0, 1, 2, 4}
+    empty = J.covering_join(pts, right.limit(0), broadcast_right=True, **kw)
+    assert empty.columns == sh.columns and empty.count() == 0
+
+
+def test_fixed_level_cell_center_kernel_matches_coverer():
+    """The batched cell-center path of s2_covering_fixed_level equals
+    covering_of_geography's cell-center case at every level, next to
+    invalid ids, empty points, NULLs and polygons in the same batch."""
+    import struct
+
+    import numpy as np
+    import pandas as pd
+
+    from duckdb_geography_spark.functions.bounds import _fixed_level_cells
+    from duckdb_geography_spark.geo.geography import (
+        FLAG_EMPTY,
+        KIND_CELL_CENTER,
+        Geography,
+        from_wkt,
+    )
+    from duckdb_geography_spark.s2 import cellmath as cm
+    from duckdb_geography_spark.s2.coverer import covering_of_geography
+
+    rng = np.random.default_rng(5)
+    leaves = cm.lonlat_to_cellid(rng.uniform(-180, 180, 40), rng.uniform(-90, 90, 40))
+    ids = list(cm.parent(leaves, rng.integers(0, 31, 40)))  # cells at mixed levels
+    blobs = [Geography.cell_center(c).encode() for c in ids]
+    blobs += [
+        struct.pack("<BBHQ", KIND_CELL_CENTER, 0, 1, 0),  # invalid id
+        struct.pack("<BBHQ", KIND_CELL_CENTER, FLAG_EMPTY, 1, int(ids[0])),
+        None,
+        from_wkt("POINT EMPTY").encode(),
+        from_wkt("POINT (12.5 41.9)").encode(),
+    ]
+    poly = from_wkt("POLYGON ((0 0, 0.01 0, 0.01 0.01, 0 0.01, 0 0))").encode()
+    for lev in (0, 5, 8, 17, 30):
+        # a polygon in the batch, where its covering fits the cell cap
+        batch = blobs + [poly] if lev <= 17 else blobs
+        got = _fixed_level_cells(pd.Series(batch, dtype=object), lev).tolist()
+        for b, g in zip(batch, got):
+            if b is None:
+                assert g is None
+                continue
+            want = covering_of_geography(Geography.decode(b), fixed_level=lev)
+            assert g == [int(v) for v in want.view(np.int64)], (lev, b)

@@ -38,25 +38,16 @@ def messy_docs(spark):
     )
 
 
-def test_lloyd_partials_kernel_matches_jvm_aggregate(spark):
-    """One Lloyd iteration's per-cluster integer sums from the r12
-    mapInArrow kernel must equal the r11 JVM form (_assign_udf +
-    sum(element_at(_quant_col(v), i)) aggregate) exactly."""
+def _lloyd_kernel_vs_jvm(emb, cents):
+    """Per-cluster integer sums of one Lloyd iteration: the mapInArrow
+    kernel's, and the JVM form's (_assign_udf +
+    sum(element_at(_quant_col(v), i)) aggregate)."""
     import numpy as np
     from pyspark.sql import functions as F
 
     from duckdb_geography_spark.llm import cluster as CL
 
-    import pandas as pd
-
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    dim = len(emb.select("embedding").first()[0])
-    sample = np.stack(
-        pd.read_parquet(
-            f"{SF_DIR}/embeddings.parquet", columns=["embedding"]
-        )["embedding"].to_numpy()[:32]
-    ).astype(np.float64)
-    cents = CL._init_centroids(sample, 4, 11)
+    dim = cents.shape[1]
     base = emb.select(F.col("embedding").alias("__v"))
     got_rows = base.mapInArrow(
         CL._lloyd_partials_kernel(cents), "__c int, __sums array<long>"
@@ -88,9 +79,60 @@ def test_lloyd_partials_kernel_matches_jvm_aggregate(spark):
         )
         for r in ref_rows
     }
+    return got, ref
+
+
+def test_lloyd_partials_kernel_matches_jvm_aggregate(spark):
+    """One Lloyd iteration's per-cluster integer sums from the r12
+    mapInArrow kernel must equal the r11 JVM form (_assign_udf +
+    sum(element_at(_quant_col(v), i)) aggregate) exactly."""
+    import numpy as np
+    import pandas as pd
+
+    from duckdb_geography_spark.llm import cluster as CL
+
+    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
+    sample = np.stack(
+        pd.read_parquet(
+            f"{SF_DIR}/embeddings.parquet", columns=["embedding"]
+        )["embedding"].to_numpy()[:32]
+    ).astype(np.float64)
+    cents = CL._init_centroids(sample, 4, 11)
+    got, ref = _lloyd_kernel_vs_jvm(emb, cents)
     assert set(got) == set(ref)
     for c in ref:
         assert (got[c] == ref[c]).all(), c
+
+
+def test_lloyd_partials_kernel_dirty_vectors(spark):
+    """NaN, NULL and inf elements, zero and NULL vectors: the kernel
+    quantizes a vector whose norm is not finite to 0, as the JVM form
+    does, instead of adding INT64_MIN to its cluster's sums."""
+    import numpy as np
+
+    from duckdb_geography_spark.llm import cluster as CL
+
+    rng = np.random.default_rng(7)
+    clean = rng.normal(size=(40, 6))
+    rows = [(i, [float(x) for x in v]) for i, v in enumerate(clean)]
+    nan_el = [float(x) for x in clean[0]]
+    nan_el[2] = float("nan")
+    null_el = [float(x) for x in clean[1]]
+    null_el[4] = None
+    inf_el = [float(x) for x in clean[2]]
+    inf_el[0] = float("inf")
+    rows += [(100, nan_el), (101, null_el), (102, inf_el), (103, [0.0] * 6), (104, None)]
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>").repartition(2)
+    cents = CL._init_centroids(clean[:16], 3, 11)
+    got, ref = _lloyd_kernel_vs_jvm(emb, cents)
+    assert set(got) == set(ref)
+    for c in ref:
+        assert (got[c] == ref[c]).all(), c
+    # the dirty rows change no sum: the clean rows alone give the same
+    clean_got, _ = _lloyd_kernel_vs_jvm(
+        spark.createDataFrame(rows[:40], "vec_id long, embedding array<double>"), cents
+    )
+    assert all((got[c] == clean_got.get(c, 0)).all() for c in got)
 
 
 def test_char_entropy_features_hook_identical(spark, messy_docs):
