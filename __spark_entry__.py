@@ -2760,8 +2760,8 @@ def _q_stream_sessionize(spark, sf_dir):
     # the 30-min timers cannot fire within the seconds the drain takes,
     # so the emitted set is deterministic (exactly the gap-closed
     # sessions)
-    if not SE.drain_and_stop(q, timeout_s=240):
-        raise TimeoutError("stream_sessionize did not drain in 240s")
+    if not SE.drain_and_stop(q):
+        raise TimeoutError(f"stream_sessionize did not drain in {SE._DRAIN_TIMEOUT_S:.0f}s")
     return (
         spark.table(qname)
         .select(

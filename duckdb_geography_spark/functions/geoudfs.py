@@ -93,6 +93,11 @@ class ByteBudgetLRU:
                 old, _ = d.popitem(last=False)
                 self.total -= self._cost.pop(old)
 
+    def discard(self, key) -> None:
+        with self._lock:
+            if self._d.pop(key, None) is not None:
+                self.total -= self._cost.pop(key)
+
     def cache_clear(self) -> None:
         with self._lock:
             self._d.clear()

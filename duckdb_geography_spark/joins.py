@@ -133,16 +133,15 @@ def _rename_right(left_cols, right: DataFrame, right_geog: str, left_geog: str,
     return r_renamed, rgeog_out, rk
 
 
-def _probe_dim(right: DataFrame, cap: int):
-    """The right side's size, and its rows when it fits ``cap``, in ONE
-    bounded job: ``limit(cap+1)``, then ``count(*)`` and, only when
-    the count is within the cap, ``collect_list(struct(*))``. Returns
+def _collect_dim(right: DataFrame, cap: int):
+    """ONE job: ``limit(cap+1)``, then ``count(*)`` and, only when the
+    count is within the cap, ``collect_list(struct(*))``. Returns
     ``(n, table)``: ``n`` counts at most ``cap + 1`` rows, and
     ``table`` is the right side as an Arrow table, or None over the
-    cap, when no row reaches the driver. ``coalesce(1)`` keeps the
-    probe to one task with no exchange (an exchange would make the
-    adaptive planner run a second job); a right side whose rows are
-    costly to compute is computed by that one task, so cache it."""
+    cap. Every column of up to ``cap + 1`` rows is computed and held,
+    so call it only on a side believed to fit. ``coalesce(1)`` keeps
+    it to one task with no exchange (an exchange would make the
+    adaptive planner run a second job)."""
     n = F.count(F.lit(1))
     got = (
         right.coalesce(1)
@@ -156,6 +155,39 @@ def _probe_dim(right: DataFrame, cap: int):
     return count, pa.Table.from_struct_array(got["rows"][0].values)
 
 
+#: semantic hashes of right sides a probe found within the broadcast
+#: cap (at most 1,024 plans). A later probe of the same plan collects
+#: it at once, so a dimension shared by repeated queries costs one job.
+_dim_fits = U.ByteBudgetLRU(1024 * 64, lambda _: 64)
+
+
+def _probe_dim(right: DataFrame, cap: int, upto: int = 0, small: int = -1):
+    """The right side's size and, when it fits ``cap``, its rows.
+    Returns ``(n, table)``: ``n`` counts at most ``max(cap, upto) + 1``
+    rows, and ``table`` is the right side as an Arrow table, or None
+    when ``n`` is over ``cap`` or at most ``small`` (a side so small
+    its caller wants the count only).
+
+    Nothing reaches the driver before a count says it fits: a
+    column-pruned ``limit().count()`` runs first, so an over-cap side
+    never has its columns (geography UDFs included) computed. A plan
+    that fit before skips the count and is collected in one job;
+    should it have outgrown the cap since, the count runs after all."""
+    key = right.semanticHash()
+    if _dim_fits.get(key):
+        n, dim = _collect_dim(right, cap)
+        if dim is not None:
+            return n, dim
+        _dim_fits.discard(key)
+    n = right.limit(max(cap, upto) + 1).count()
+    if n > cap or n <= small:
+        return n, None
+    n, dim = _collect_dim(right, cap)
+    if dim is not None:
+        _dim_fits.put(key, True)
+    return n, dim
+
+
 def _dim_key(value, level: int):
     """Cache key of one dimension geography: the level and a 160-bit
     BLAKE2b digest of its value (bytes, or a cell id / cell union)."""
@@ -167,8 +199,8 @@ def _dim_coverings(spark, geog: pa.ChunkedArray, gtype, level: int) -> list:
     """Level-``level`` covering (int64 cell ids) of every dimension row,
     from the application's :data:`~.functions.geoudfs.dim_coverings`
     cache. The values the cache lacks are covered together in ONE
-    parallel job over a driver-built relation, largest value first,
-    dealt round-robin so each task gets a like share of the vertices.
+    parallel job, one task per group of values: largest value first,
+    dealt round-robin, so each task gets a like share of the vertices.
     NULL rows cover to nothing."""
     vals = geog.to_pylist()
     out = [np.empty(0, dtype=np.int64)] * len(vals)
@@ -187,15 +219,15 @@ def _dim_coverings(spark, geog: pa.ChunkedArray, gtype, level: int) -> list:
     keys = list(todo)
     par = min(len(keys), spark.sparkContext.defaultParallelism)
     size = [len(vals[todo[k][0]]) if isinstance(vals[todo[k][0]], bytes) else 0 for k in keys]
-    order = sorted(range(len(keys)), key=lambda j: -size[j])
-    order = [j for s in range(par) for j in order[s::par]]
-    src = pa.table({
-        "__k": pa.array(order, pa.int64()),
-        "__g": geog.take([todo[keys[j]][0] for j in order]),
-    })
+    groups = [[] for _ in range(par)]
+    for s, j in enumerate(sorted(range(len(keys)), key=lambda j: -size[j])):
+        groups[s % par].append((j, vals[todo[keys[j]][0]]))
+    # one group per partition: parallelize slices a list of ``par``
+    # items one to a slice, and flatMap keeps the partitions
+    rdd = spark.sparkContext.parallelize(groups, par).flatMap(lambda g: g)
     schema = StructType([StructField("__k", LongType()), StructField("__g", gtype)])
     res = (
-        spark.createDataFrame(src, schema)
+        spark.createDataFrame(rdd, schema)
         .select("__k", s2_covering_fixed_level("__g", level).alias("__c"))
         .toArrow()
     )
@@ -301,10 +333,12 @@ def covering_join(
     left also has renamed ``<name>_r``).
 
     ``broadcast_right=True`` declares the right side a small dimension
-    table. One bounded probe job collects it to the driver (at most
-    :data:`BROADCAST_RIGHT_MAX_ROWS` rows; a larger right side is never
-    collected and the join falls back to the shuffle form below, with
-    a warning). Each right row's level-``level`` covering then comes
+    table. A bounded, column-pruned count probes it, and only a side
+    of at most :data:`BROADCAST_RIGHT_MAX_ROWS` rows is then collected
+    to the driver (a side that fit before is collected in one job with
+    no count); a larger right side never has its columns computed,
+    and the join falls back to the shuffle form below with a warning.
+    Each right row's level-``level`` covering then comes
     from an application-wide driver cache keyed by the geography's
     bytes and the level, and the rows the cache lacks are covered
     together in one parallel job — so a dimension shared by many
@@ -1303,9 +1337,10 @@ def spatial_join(
 ) -> DataFrame:
     """Strategy-picking spatial join — SURVEY §4.3's "auto-rewrite
     rule" expressed the way PySpark can: a driver-side planner that
-    probes the right side (ONE bounded job: ``limit(n+1)``, counted,
-    and collected to the driver only when it fits the broadcast cap)
-    and picks the physical form:
+    probes the right side (a bounded, column-pruned
+    ``limit(n+1).count()``, then a collect to the driver only when it
+    fits the broadcast cap; a side that fit before is collected in
+    one job with no count) and picks the physical form:
 
     - right has <= ``nl_rows`` rows -> ``broadcast_spatial_join``
       (broadcast nested-loop over the exact predicate: for a handful
@@ -1318,7 +1353,9 @@ def spatial_join(
       (misses covered in one parallel job), and ``(row, cell)`` longs
       plus one copy of each right row are broadcast;
     - otherwise -> plain ``covering_join`` (shuffle hash equi-join;
-      AQE re-plans/skew-splits at runtime);
+      AQE re-plans/skew-splits at runtime), with the broadcast
+      fallback warning only when ``broadcast_rows`` allowed a
+      broadcast the cap refused;
     - ``planet_scale_right=True`` (hemisphere-sized geographies whose
       fixed-level covering would overflow) -> ``covering_range_join``,
       the range_min/range_max BETWEEN form.
@@ -1339,8 +1376,9 @@ def spatial_join(
             right_key=right_key,
         )
     cap = min(broadcast_rows, BROADCAST_RIGHT_MAX_ROWS)
-    n_right, dim = _probe_dim(right, cap)
-    if n_right <= nl_rows and predicate in ("intersects", "contains"):
+    nl = nl_rows if predicate in ("intersects", "contains") else -1
+    n_right, dim = _probe_dim(right, cap, upto=broadcast_rows, small=nl)
+    if n_right <= nl:
         refine = _PREDICATES[predicate]
         r, rgeog_out, _ = _rename_right(left.columns, right, right_geog, left_geog)
         return broadcast_spatial_join(
@@ -1350,7 +1388,7 @@ def spatial_join(
         return _dim_covering_join(
             left, right.schema, dim, predicate, level, left_geog, right_geog, left_key
         )
-    if broadcast_rows > cap:
+    if n_right <= broadcast_rows:  # the cap refused what broadcast_rows allowed
         _warn_fallback("covering_join", cap, stacklevel=2)
     return covering_join(
         left,

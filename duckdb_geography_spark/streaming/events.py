@@ -258,7 +258,12 @@ def sessionize(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
     )
 
 
-def drain_and_stop(query, timeout_s: float = 240.0) -> bool:
+#: how long :func:`drain_and_stop` polls before it gives up; it only
+#: matters when the stream does not drain
+_DRAIN_TIMEOUT_S = 240.0
+
+
+def drain_and_stop(query) -> bool:
     """Wait until an ``availableNow`` query has processed all the input
     available at its start, then stop it; True if it drained.
 
@@ -268,8 +273,8 @@ def drain_and_stop(query, timeout_s: float = 240.0) -> bool:
     settles. This polls the query's progress until a batch with no
     input follows one with input, or until the query ends by itself
     (re-raising its failure). The query is stopped either way; False
-    means ``timeout_s`` passed first."""
-    deadline = time.time() + timeout_s
+    means :data:`_DRAIN_TIMEOUT_S` passed first."""
+    deadline = time.time() + _DRAIN_TIMEOUT_S
     drained = False
     while time.time() < deadline:
         if not query.isActive:

@@ -111,3 +111,75 @@ def test_distance_join_honors_hint_under_cap(spark, points):
         broadcast_right=True,
     )
     assert "BroadcastExchange" in _physical(out)
+
+
+def _unevaluable_regions(spark, n: int):
+    """A right side whose geography column fails if it is ever
+    computed: a probe must count it without evaluating that UDF."""
+
+    def _boom(_):  # nested, so it pickles by value
+        raise RuntimeError("the probe evaluated the right side's geography UDF")
+
+    return spark.range(0, n, 1, 4).select(
+        F.col("id").alias("rid"), F.udf(_boom, "binary")("id").alias("geog")
+    )
+
+
+def _fallback_warned(w) -> bool:
+    return any("falling back to a shuffle" in str(x.message) for x in w)
+
+
+def test_over_cap_side_is_not_computed(spark, points, monkeypatch, no_auto_broadcast):
+    monkeypatch.setattr(J, "BROADCAST_RIGHT_MAX_ROWS", 10)
+    left = points.select("pid", "geog")
+    right = _unevaluable_regions(spark, 50)
+    for _ in range(2):  # a repeated probe of the same plan counts again
+        with warnings.catch_warnings(record=True) as w:
+            warnings.simplefilter("always")
+            bc = J.covering_join(left, right, left_key="pid", right_key="rid",
+                                 broadcast_right=True)
+            sj = J.spatial_join(left, right, left_key="pid", right_key="rid")
+        assert _fallback_warned(w)
+        for out in (bc, sj):
+            plan = _physical(out)
+            assert "BroadcastExchange" not in plan and "BroadcastHashJoin" not in plan
+
+
+def test_spatial_join_warns_only_when_the_cap_refuses(
+    spark, points, monkeypatch, no_auto_broadcast
+):
+    monkeypatch.setattr(J, "BROADCAST_RIGHT_MAX_ROWS", 10)
+    left = points.select("pid", "geog")
+
+    def warned(n: int) -> bool:
+        with warnings.catch_warnings(record=True) as w:
+            warnings.simplefilter("always")
+            out = J.spatial_join(left, _unevaluable_regions(spark, n), left_key="pid",
+                                 right_key="rid", broadcast_rows=20)
+        assert "BroadcastExchange" not in _physical(out)
+        return _fallback_warned(w)
+
+    assert warned(15)  # broadcast_rows allowed it, the cap refused it
+    assert not warned(50)  # over broadcast_rows: the shuffle form is the plan's own pick
+
+
+def test_probe_recounts_a_side_that_outgrew_the_cap(
+    spark, points, monkeypatch, no_auto_broadcast
+):
+    """A plan remembered as fitting is collected without a count; when
+    it no longer fits, the probe forgets it and counts after all."""
+    left = points.select("pid", "geog")
+    right = _regions(spark, 15)
+    monkeypatch.setattr(J, "BROADCAST_RIGHT_MAX_ROWS", 20)
+    out = J.covering_join(left, right, left_key="pid", right_key="rid", broadcast_right=True)
+    out.count()
+    assert "BroadcastExchange" in _physical(out)
+    assert J._dim_fits.get(right.semanticHash())
+    monkeypatch.setattr(J, "BROADCAST_RIGHT_MAX_ROWS", 10)
+    with warnings.catch_warnings(record=True) as w:
+        warnings.simplefilter("always")
+        out = J.covering_join(left, right, left_key="pid", right_key="rid",
+                              broadcast_right=True)
+    assert _fallback_warned(w)
+    assert "BroadcastExchange" not in _physical(out)
+    assert J._dim_fits.get(right.semanticHash()) is None

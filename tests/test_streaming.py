@@ -67,7 +67,7 @@ def test_sessionize(spark):
         .start()
     )
     # the per-user timers keep the query alive: drain, then stop it
-    assert SE.drain_and_stop(q, timeout_s=180)
+    assert SE.drain_and_stop(q)
     got = spark.sql("SELECT * FROM sessions").collect()
     # closed sessions require gaps; with availableNow a single batch may
     # close few — schema and non-negative invariants are the contract
@@ -105,7 +105,7 @@ def test_sessionize_splits_gaps_within_one_microbatch(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    assert SE.drain_and_stop(q, timeout_s=120)
+    assert SE.drain_and_stop(q)
     got = spark.sql("SELECT * FROM s_split ORDER BY session_start").collect()
     # first session (2 events, 10-min span) closes INSIDE the batch;
     # the t0+2h session stays open in state
