@@ -92,6 +92,21 @@ def _rows_at(sf_dir: str, table: str) -> int:
 
 _QVEC_CACHE: dict = {}
 
+#: entry bound of the driver-side memo dicts (_QVEC_CACHE, _T_CACHE)
+_MEMO_MAX = 64
+
+
+def _memo_put(cache: dict, key, val):
+    """Store ``val`` under ``key``, first evicting the oldest entry
+    (dict order) when the memo holds _MEMO_MAX: stamp-keyed entries
+    strand after a data regen, and a long-lived process cycling
+    sessions or sf dirs must not accumulate plans, but the entries in
+    use stay warm."""
+    if len(cache) >= _MEMO_MAX:
+        del cache[next(iter(cache))]
+    cache[key] = val
+    return val
+
 
 def _query_vec(sf_dir: str, vec_id: int = 0) -> list:
     """Driver-side fetch of ONE query vector from embeddings.parquet —
@@ -117,10 +132,6 @@ def _query_vec(sf_dir: str, vec_id: int = 0) -> list:
     key = (sf_dir, int(vec_id), stamp)
     hit = _QVEC_CACHE.get(key)
     if hit is None:
-        if len(_QVEC_CACHE) >= 64:
-            # stamp-keyed entries strand after a data regen (r11
-            # ADVICE) — bound like _T_CACHE instead of growing forever
-            _QVEC_CACHE.clear()
         t = _pq.read_table(
             path,
             columns=["vec_id", "embedding"],
@@ -128,7 +139,7 @@ def _query_vec(sf_dir: str, vec_id: int = 0) -> list:
         )
         if t.num_rows == 0:
             raise KeyError(f"vec_id {vec_id} not in {path}")
-        hit = _QVEC_CACHE[key] = [float(x) for x in t["embedding"][0].as_py()]
+        hit = _memo_put(_QVEC_CACHE, key, [float(x) for x in t["embedding"][0].as_py()])
     return list(hit)
 
 
@@ -187,8 +198,6 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     hit = _T_CACHE.get(key)
     if hit is not None:
         return hit
-    if len(_T_CACHE) >= 64:  # bound: a long-lived process cycling
-        _T_CACHE.clear()     # sessions/sf dirs must not accumulate plans
     df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
     for field in df.schema.fields:
         if field.name in _NANO_TS and field.dataType.simpleString() == "bigint":
@@ -212,8 +221,7 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name in ("documents", "embeddings", "customer", "supplier"):
         ncpu = spark.sparkContext.defaultParallelism
         df = df.repartition(ncpu)
-    _T_CACHE[key] = df
-    return df
+    return _memo_put(_T_CACHE, key, df)
 
 
 # ---------------------------------------------------------------------------
@@ -435,13 +443,22 @@ LIMIT 10
 
 def _q_events_hourly(spark, sf_dir):
     _prep(spark)
-    ev = _t(spark, sf_dir, "events")
     # group on the raw truncated TIMESTAMP and format after the
     # aggregate (r12, guide §2.3): date_format on hour-truncated
     # timestamps is injective (full seconds precision in the pattern),
     # so the groups — and therefore every output row — are identical,
     # but the per-event-row string formatting is gone and the shuffle
-    # key narrows from a 19-char string to an 8-byte timestamp
+    # key narrows from a 19-char string to an 8-byte timestamp. That
+    # holds only in a zone without DST, which _prep's UTC pin provides:
+    # under a DST zone the repeated autumn hour formats two instants to
+    # one string and the query would emit two rows for it.
+    tz = spark.conf.get("spark.sql.session.timeZone")
+    if tz != "UTC":
+        raise RuntimeError(
+            f"events_hourly needs spark.sql.session.timeZone=UTC (as _prep sets it), "
+            f"got {tz!r}: under a DST zone its hour groups would not be unique"
+        )
+    ev = _t(spark, sf_dir, "events")
     return (
         ev.groupBy(F.date_trunc("hour", "ts").alias("__hour_ts"), "event_type")
         .agg(

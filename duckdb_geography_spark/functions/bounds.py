@@ -100,6 +100,19 @@ def s2_covering_fixed_level(geog, fixed_level: int) -> Column:
     return _udf(_c(geog))
 
 
+def _cell_centers(s: pd.Series):
+    """Rows of ``s`` that are cell-center blobs (points), and their
+    cell ids read from the blob header with no decode: ``(rows, ids)``
+    as int64 and uint64 arrays. An empty point's id is 0 (invalid)."""
+    rows, ids = [], []
+    for i, b in enumerate(s):
+        if b is not None and b[0] == KIND_CELL_CENTER and len(b) >= 12:
+            rows.append(i)
+            empty = b[1] & FLAG_EMPTY or b[2:4] == b"\0\0"
+            ids.append(0 if empty else int.from_bytes(b[4:12], "little"))
+    return np.array(rows, dtype=np.int64), np.array(ids, dtype=np.uint64)
+
+
 def _fixed_level_cells(s: pd.Series, lev: int) -> pd.Series:
     """Fixed-level covering of each encoded geography. Cell-center
     blobs (points: the fact side of a point-in-polygon join) take one
@@ -108,22 +121,14 @@ def _fixed_level_cells(s: pd.Series, lev: int) -> pd.Series:
     ``covering_of_geography``'s cell-center case (an invalid id is
     empty, a valid one covers as its level-``lev`` ancestor)."""
     out = [None] * len(s)
-    centers, cids = [], []
+    centers, ids = _cell_centers(s)
+    up = cm.parent(ids, lev).view(np.int64).tolist()
+    for i, ok, c in zip(centers.tolist(), cm.is_valid(ids).tolist(), up):
+        out[i] = [c] if ok else []
     for i, b in enumerate(s):
-        if b is None:
-            continue
-        if b[0] == KIND_CELL_CENTER and len(b) >= 12:
-            centers.append(i)
-            empty = b[1] & FLAG_EMPTY or b[2:4] == b"\0\0"
-            cids.append(0 if empty else int.from_bytes(b[4:12], "little"))
-            continue
-        cells = covering_of_encoded(bytes(b), fixed_level=lev)
-        out[i] = [int(v) for v in cells.view(np.int64)]
-    if centers:
-        ids = np.array(cids, dtype=np.uint64)
-        up = cm.parent(ids, lev).view(np.int64).tolist()
-        for i, ok, c in zip(centers, cm.is_valid(ids).tolist(), up):
-            out[i] = [c] if ok else []
+        if b is not None and out[i] is None:
+            cells = covering_of_encoded(bytes(b), fixed_level=lev)
+            out[i] = [int(v) for v in cells.view(np.int64)]
     return pd.Series(out, dtype=object)
 
 

@@ -196,7 +196,8 @@ def winding_number(x: np.ndarray, ring_xyz: np.ndarray) -> int:
     are resolved by :func:`point_on_segment` in callers.
     """
     # tangent-plane directions of each vertex as seen from x
-    d = ring_xyz - np.outer(ring_xyz @ x, x)
+    # an elementwise dot, not BLAS: winding_numbers repeats it bit for bit
+    d = ring_xyz - np.outer(_dot(ring_xyz, x), x)
     norms = np.linalg.norm(d, axis=1)
     if np.any(norms < 1e-14):
         return 1  # a vertex coincides with x -> treat as contained (CLOSED)
@@ -258,6 +259,29 @@ def segment_segment_min_distance(a0, a1, b0, b1) -> float:
 # x 8 bytes x ~6 live temporaries ~= 50 MB peak per block — large
 # enough to amortize numpy dispatch, small enough for executor heaps.
 _PAIR_BLOCK = 1 << 20
+
+
+def winding_numbers(xs: np.ndarray, ring_xyz: np.ndarray, block: int = _PAIR_BLOCK) -> np.ndarray:
+    """:func:`winding_number` of every point of ``xs`` (m,3) around one
+    ring, as an int array: the same formula, evaluated elementwise over
+    (points, vertices) blocks instead of one point at a time."""
+    m, v = len(xs), len(ring_xyz)
+    out = np.empty(m, dtype=np.int64)
+    rows = max(1, block // max(v, 1))
+    for i in range(0, m, rows):
+        x = xs[i : i + rows, None, :]
+        d = ring_xyz[None, :, :] - _dot(ring_xyz[None, :, :], x)[:, :, None] * x
+        norms = np.linalg.norm(d, axis=2)
+        coincide = np.any(norms < 1e-14, axis=1)
+        with np.errstate(divide="ignore", invalid="ignore"):
+            d = d / norms[:, :, None]
+        d_next = np.roll(d, -1, axis=1)
+        cosang = np.clip(np.einsum("mij,mij->mi", d, d_next), -1.0, 1.0)
+        sinang = np.einsum("mij,mij->mi", cross3(d, d_next), np.broadcast_to(x, d.shape))
+        total = np.sum(np.arctan2(sinang, cosang), axis=1)
+        w = np.round(total / (2.0 * np.pi))
+        out[i : i + rows] = np.where(coincide, 1, w)
+    return out
 
 
 def points_segments_min_angle(pts, e0, e1, block: int = _PAIR_BLOCK) -> float:

@@ -372,6 +372,50 @@ def _covers_point(parts: "_Parts", x: np.ndarray) -> bool:
     return False
 
 
+def _covers_points(parts: "_Parts", xs: np.ndarray) -> np.ndarray:
+    """:func:`_covers_point` of every point of ``xs`` (n,3) against one
+    parts set, as a bool array — the refine of a point-in-polygon join,
+    where one right geography meets many candidate points. Each polygon
+    takes its cap reject, then one blocked (points, edges) boundary
+    distance test over all its rings and one elementwise winding test a
+    ring; lines and points take their tolerances the same way."""
+    hit = np.zeros(len(xs), dtype=bool)
+    for rings, orients, cap in zip(parts.polygons, parts._orients, parts._caps):
+        todo = ~hit
+        if cap is not None:
+            todo &= xs @ cap[0] >= cap[1]
+        idx = np.flatnonzero(todo)
+        if not len(idx):
+            continue
+        x = xs[idx]
+        a = np.concatenate(rings)
+        b = np.concatenate([np.roll(r, -1, axis=0) for r in rings])
+        on = _on_segments(x, a, b)
+        inside = gd.winding_numbers(x, rings[0]) == orients[0]
+        for h, o in zip(rings[1:], orients[1:]):
+            inside &= gd.winding_numbers(x, h) != o
+        hit[idx[on | inside]] = True
+    for l in parts.lines:
+        if len(l) == 1:
+            hit |= gd.angle(xs, l[:1]) <= 1e-15
+        else:
+            hit |= _on_segments(xs, l[:-1], l[1:])
+    if len(parts.points):
+        hit |= np.any(gd.angle(xs[:, None, :], parts.points[None]) <= PT_TOL, axis=1)
+    return hit
+
+
+def _on_segments(xs: np.ndarray, a: np.ndarray, b: np.ndarray) -> np.ndarray:
+    """Per point of ``xs``: within 1e-15 rad of any segment
+    ``a[j]-b[j]``, over (points, segments) blocks."""
+    out = np.zeros(len(xs), dtype=bool)
+    rows = max(1, gd._PAIR_BLOCK // len(a))
+    for i in range(0, len(xs), rows):
+        d = gd.point_segment_distance(xs[i : i + rows, None, :], a[None], b[None])
+        out[i : i + rows] = np.any(d <= 1e-15, axis=1)
+    return out
+
+
 def _crosses_boundary_transversally(a: "_Parts", chain: np.ndarray, ring=False) -> bool:
     if len(chain) < 2:
         return False

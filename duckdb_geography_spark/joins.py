@@ -12,8 +12,9 @@ module restructures every spatial join as a **covering equi-join**:
       -> exact predicate refine (Arrow-batched UDF)
 
 A small dimension side is instead collected once, covered once per
-application (driver-side cache), and broadcast as ``(row, cell)``
-longs; see :func:`covering_join`.
+application (driver-side cache), and probed from one pandas UDF on the
+big side that finds, refines and returns each row's matches; see
+:func:`covering_join`.
 
 Properties at scale: the join is a plain equi-join (AQE can re-plan
 it, skew-split it, or broadcast the small side); the refine UDF only
@@ -41,11 +42,13 @@ from pyspark.sql.types import ArrayType, LongType, StructField, StructType
 
 from .functions import cells as C
 from .functions import predicates as P
-from .functions.bounds import s2_covering_fixed_level
+from .functions.bounds import _cell_centers, _fixed_level_cells, s2_covering_fixed_level
 from .functions.io import s2_prepare, s2_unprepare
 from .functions import geoudfs as U
+from .s2 import cellmath as cm
 from .s2.coverer import covering_of_encoded
 from .geo import geodesy as gd
+from .geo import ops
 
 __all__ = [
     "covering_join",
@@ -134,25 +137,14 @@ def _rename_right(left_cols, right: DataFrame, right_geog: str, left_geog: str,
 
 
 def _collect_dim(right: DataFrame, cap: int):
-    """ONE job: ``limit(cap+1)``, then ``count(*)`` and, only when the
-    count is within the cap, ``collect_list(struct(*))``. Returns
-    ``(n, table)``: ``n`` counts at most ``cap + 1`` rows, and
-    ``table`` is the right side as an Arrow table, or None over the
-    cap. Every column of up to ``cap + 1`` rows is computed and held,
-    so call it only on a side believed to fit. ``coalesce(1)`` keeps
-    it to one task with no exchange (an exchange would make the
-    adaptive planner run a second job)."""
-    n = F.count(F.lit(1))
-    got = (
-        right.coalesce(1)
-        .limit(cap + 1)
-        .agg(n.alias("n"), F.when(n <= cap, F.collect_list(F.struct("*"))).alias("rows"))
-        .toArrow()
-    )
-    count = got["n"][0].as_py()
-    if count > cap:
-        return count, None
-    return count, pa.Table.from_struct_array(got["rows"][0].values)
+    """ONE job: ``limit(cap+1)`` collected as Arrow, the side's
+    partitions computed in parallel tasks. Returns ``(n, table)``:
+    ``n`` counts at most ``cap + 1`` rows, and ``table`` is the right
+    side, or None over the cap. Every column of up to ``cap + 1`` rows
+    is computed and reaches the driver, so call it only on a side
+    believed to fit."""
+    got = right.limit(cap + 1).toArrow()
+    return got.num_rows, (got if got.num_rows <= cap else None)
 
 
 #: semantic hashes of right sides a probe found within the broadcast
@@ -247,52 +239,102 @@ def _dim_covering_join(
     level: int,
     left_geog: str,
     right_geog: str,
-    left_key: Optional[str],
 ) -> DataFrame:
     """The broadcast form of :func:`covering_join` over a right side
-    already collected by :func:`_probe_dim`. Two driver-built local
-    relations are broadcast: ``(__ri, __cell)`` longs, one row per
-    covering cell of right row ``__ri``, and ``(__ri, <right
-    columns>)``, one row per right row. Candidates are deduplicated on
-    ``(left key, __ri)`` behind an explicit hash repartition over the
-    default parallelism (a key-only exchange the adaptive planner
-    would otherwise coalesce to one partition, and so run the refine
-    in one task), then the right columns are joined back by ``__ri``
-    and the exact predicate refines."""
+    already collected by :func:`_probe_dim`. The right rows' coverings
+    (from the application-wide cache) become a sorted ``(cell, row)``
+    index that ships with one pandas UDF; per left Arrow batch, the UDF
+    covers each left row at ``level``, looks its candidates up in the
+    index, refines them with the exact predicate and returns the
+    matching right rows as ``array<long>``. ``explode`` and one
+    broadcast hash join on ``__ri`` against the right rows (one row
+    each) bring the right columns back. Everything before the join
+    runs in the left side's stage, one task per left partition; no
+    exchange and no per-cell row exists."""
     spark = left.sparkSession
-    refine = _PREDICATES[predicate]
-    lk_df, lk, lk_synth = _with_key(left, left_key, "__lkey")
-
-    ri = pa.array(np.arange(dim.num_rows, dtype=np.int64))
+    n = dim.num_rows
+    ri = pa.array(np.arange(n, dtype=np.int64))
     rows = spark.createDataFrame(
         dim.add_column(0, "__ri", ri),
         StructType([StructField("__ri", LongType(), False)] + right_schema.fields),
     )
-    rows, rgeog_out, _ = _rename_right(lk_df.columns, rows, right_geog, left_geog)
+    rows, _, _ = _rename_right(left.columns, rows, right_geog, left_geog)
 
-    covs = _dim_coverings(spark, dim.column(right_geog), right_schema[right_geog].dataType, level)
-    counts = np.fromiter((len(c) for c in covs), dtype=np.int64, count=len(covs))
-    cells = spark.createDataFrame(
-        pa.table({
-            "__ri": np.repeat(ri.to_numpy(), counts),
-            "__cell": np.concatenate([np.empty(0, dtype=np.int64), *covs]),
-        }),
-        "__ri long, __cell long",
+    geog = dim.column(right_geog)
+    covs = _dim_coverings(spark, geog, right_schema[right_geog].dataType, level)
+    counts = np.fromiter((len(c) for c in covs), dtype=np.int64, count=n)
+    cells = np.concatenate([np.empty(0, dtype=np.int64), *covs])
+    order = np.argsort(cells, kind="stable")
+    owner = np.repeat(np.arange(n, dtype=np.int64), counts)[order]
+    blobs = None
+    if predicate != "mayintersect":
+        blobs = list(U.coerce_geog(pd.Series(geog.to_pylist(), dtype=object)))
+    probe = _dim_probe_udf(cells[order], owner, blobs, predicate, level)
+    return (
+        left.withColumn("__ri", F.explode(probe(F.col(left_geog))))
+        .join(F.broadcast(rows), "__ri")
+        .drop("__ri")
     )
 
-    l_cells = lk_df.withColumn(
-        "__cell", F.explode(s2_covering_fixed_level(left_geog, level))
-    )
-    cand = (
-        l_cells.join(F.broadcast(cells), "__cell")
-        .drop("__cell")
-        .repartition(spark.sparkContext.defaultParallelism, lk, "__ri")
-        .dropDuplicates([lk, "__ri"])
-    )
-    pairs = cand.join(F.broadcast(rows), "__ri")
-    if refine is not None:
-        pairs = pairs.where(refine(F.col(left_geog), F.col(rgeog_out)))
-    return pairs.drop("__ri", *([lk] if lk_synth else []))
+
+def _dim_probe_udf(cells: np.ndarray, owner: np.ndarray, blobs, predicate: str, level: int):
+    """The pandas UDF of :func:`_dim_covering_join`: left geography ->
+    the sorted, distinct rows of the dimension that it matches.
+    ``cells`` is the dimension's sorted level-``level`` covering cells
+    and ``owner`` the row of each; ``blobs`` the rows' geographies
+    (None for ``mayintersect``, which keeps every candidate)."""
+    exact = None if blobs is None else getattr(ops, predicate)
+    n_dim = int(owner.max(initial=0)) + 1  # pairs encode as row * n_dim + right row
+
+    def refine(s: pd.Series, row: np.ndarray, ri: np.ndarray) -> np.ndarray:
+        """The exact predicate of each candidate pair. A cell-center
+        left row under ``intersects`` is refined in a batch with the
+        other candidates of its right row (``ops._covers_points``);
+        any other pair takes ``ops.<predicate>``."""
+        keep = np.zeros(len(row), dtype=bool)
+        batched = np.zeros(len(row), dtype=bool)
+        if exact is ops.intersects:
+            centers, ids = _cell_centers(s)
+            is_center = np.zeros(len(s), dtype=bool)
+            is_center[centers] = True
+            batched = is_center[row]
+        if batched.any():
+            xyz = np.zeros((len(s), 3))
+            xyz[centers] = np.stack(cm.cellid_to_center_xyz(ids), axis=1)
+            sel = np.flatnonzero(batched)
+            sel = sel[np.argsort(ri[sel], kind="stable")]
+            starts = np.flatnonzero(np.diff(ri[sel], prepend=-1))
+            for group in np.split(sel, starts[1:]):
+                g = U.decode_cached(blobs[ri[group[0]]])
+                if not g.is_empty():
+                    keep[group] = ops._covers_points(ops.parts_of(g), xyz[row[group]])
+        for j in np.flatnonzero(~batched):
+            keep[j] = exact(
+                U.decode_cached(bytes(s.iat[row[j]])), U.decode_cached(blobs[ri[j]])
+            )
+        return keep
+
+    def s2_dim_probe(s: pd.Series) -> pd.Series:
+        if not len(s):
+            return pd.Series([], dtype=object)
+        s = U.coerce_geog(s)
+        covs = _fixed_level_cells(s, level)
+        lens = np.fromiter((len(c) if c else 0 for c in covs), dtype=np.int64, count=len(s))
+        flat = np.fromiter(
+            (c for cs in covs if cs for c in cs), dtype=np.int64, count=int(lens.sum())
+        )
+        lo = np.searchsorted(cells, flat, "left")
+        k = np.searchsorted(cells, flat, "right") - lo
+        # every (left row, right row) candidate, each pair once
+        pos = np.repeat(lo - np.cumsum(k) + k, k) + np.arange(int(k.sum()))
+        pair = np.unique(np.repeat(np.repeat(np.arange(len(s)), lens), k) * n_dim + owner[pos])
+        row, ri = pair // n_dim, pair % n_dim
+        if exact is not None and len(pair):
+            keep = refine(s, row, ri)
+            row, ri = row[keep], ri[keep]
+        return pd.Series(np.split(ri, np.searchsorted(row, np.arange(1, len(s)))), dtype=object)
+
+    return F.pandas_udf(s2_dim_probe, ArrayType(LongType()))
 
 
 def _with_key(df: DataFrame, key: Optional[str], name: str):
@@ -335,18 +377,26 @@ def covering_join(
     ``broadcast_right=True`` declares the right side a small dimension
     table. A bounded, column-pruned count probes it, and only a side
     of at most :data:`BROADCAST_RIGHT_MAX_ROWS` rows is then collected
-    to the driver (a side that fit before is collected in one job with
-    no count); a larger right side never has its columns computed,
-    and the join falls back to the shuffle form below with a warning.
-    Each right row's level-``level`` covering then comes
-    from an application-wide driver cache keyed by the geography's
-    bytes and the level, and the rows the cache lacks are covered
-    together in one parallel job — so a dimension shared by many
-    queries is covered once. What is broadcast is ``(row, cell)``
-    longs plus one copy of each right row, never a geography per
-    cell. Candidates are deduplicated per (left row, right row), so
-    with a unique ``left_key`` (or none) the rows are those of the
-    shuffle form; ``right_key`` is not needed on this path.
+    to the driver in one parallel job (a side that fit before is
+    collected with no count); a larger right side never has its
+    columns computed, and the join falls back to the shuffle form
+    below with a warning. Each right row's level-``level`` covering
+    then comes from an application-wide driver cache keyed by the
+    geography's bytes and the level, and the rows the cache lacks are
+    covered together in one parallel job — so a dimension shared by
+    many queries is covered once. The coverings become a sorted
+    ``(cell, row)`` index that ships, with the right geographies, in
+    one pandas UDF over the left side: per Arrow batch it covers each
+    left row, looks its candidates up in the index, refines them (a
+    point under ``intersects`` in one batch per right row, anything
+    else pair by pair) and returns the matching right rows, which
+    ``explode`` and a broadcast hash join on one row per right row
+    turn into output rows. No exchange runs, so the join's parallelism
+    is the left side's partitioning, as for every map-side UDF of this
+    package. Candidates are deduplicated per left row, so with a
+    unique ``left_key`` (or none) the rows are those of the shuffle
+    form; neither key is used on this path, and left rows that share
+    a key each keep their own matches.
 
     Without the hint both sides explode their coverings and meet in a
     shuffle equi-join on the cell, deduplicated on
@@ -358,7 +408,7 @@ def covering_join(
         _, dim = _probe_dim(right, cap)
         if dim is not None:
             return _dim_covering_join(
-                left, right.schema, dim, predicate, level, left_geog, right_geog, left_key
+                left, right.schema, dim, predicate, level, left_geog, right_geog
             )
         _warn_fallback("covering_join", cap, stacklevel=2)
 
@@ -389,7 +439,6 @@ def _range_covering_udf(max_cells: int, coarse_level: int):
     descendants so every emitted cell has a unique coarse ancestor
     (the range join's bucket key). Bounded fan-out: a face cell
     splits into 4^coarse_level cells."""
-    from .s2 import cellmath as cm
 
     @F.pandas_udf(ArrayType(LongType()))
     def _udf(s: pd.Series) -> pd.Series:
@@ -1113,9 +1162,7 @@ def _knn_broadcast_plan(
     """
     from pyspark.sql.types import DoubleType, IntegerType, StructField, StructType
 
-    from .geo import ops
     from .geo.geography import KIND_CELL_CENTER
-    from .s2 import cellmath as cm
 
     m = len(rrows)
     out_schema = StructType(
@@ -1350,8 +1397,10 @@ def spatial_join(
       :data:`BROADCAST_RIGHT_MAX_ROWS`) -> ``covering_join``'s
       broadcast form, fed the rows the probe collected: each right
       row's covering comes from the application-wide covering cache
-      (misses covered in one parallel job), and ``(row, cell)`` longs
-      plus one copy of each right row are broadcast;
+      (misses covered in one parallel job), one pandas UDF over the
+      left side finds and refines each left row's matches in the
+      left side's tasks, and one row per right row is broadcast to
+      join the right columns back;
     - otherwise -> plain ``covering_join`` (shuffle hash equi-join;
       AQE re-plans/skew-splits at runtime), with the broadcast
       fallback warning only when ``broadcast_rows`` allowed a
@@ -1386,7 +1435,7 @@ def spatial_join(
         )
     if dim is not None:
         return _dim_covering_join(
-            left, right.schema, dim, predicate, level, left_geog, right_geog, left_key
+            left, right.schema, dim, predicate, level, left_geog, right_geog
         )
     if n_right <= broadcast_rows:  # the cap refused what broadcast_rows allowed
         _warn_fallback("covering_join", cap, stacklevel=2)

@@ -12,6 +12,30 @@ _PKG_DIR = os.path.dirname(os.path.abspath(__file__))
 _PKG_NAME = os.path.basename(_PKG_DIR)
 
 
+#: the default driver heap's share of physical memory, and its bounds
+_HEAP_SHARE, _HEAP_MIN_GB, _HEAP_MAX_GB = 0.6, 1, 16
+
+
+def default_driver_memory(meminfo: str | None = None) -> str:
+    """Default ``spark.driver.memory``: 60% of the machine's memory
+    (``MemTotal`` of ``/proc/meminfo``, or the ``meminfo`` text given),
+    rounded down to whole GiB, within 1g..16g. A fixed 16g would
+    exceed the memory of a smaller machine. Where ``/proc/meminfo``
+    cannot be read, 16g."""
+    if meminfo is None:
+        try:
+            with open("/proc/meminfo") as f:
+                meminfo = f.read()
+        except OSError:
+            return f"{_HEAP_MAX_GB}g"
+    for line in meminfo.splitlines():
+        if line.startswith("MemTotal:"):
+            kib = int(line.split()[1])
+            gib = int(kib * _HEAP_SHARE) >> 20
+            return f"{min(max(gib, _HEAP_MIN_GB), _HEAP_MAX_GB)}g"
+    return f"{_HEAP_MAX_GB}g"
+
+
 def get_spark(app_name: str = "duckdb_geography_spark", cpus: str | int = "*",
               shuffle_partitions: int | None = None) -> SparkSession:
     """Local-mode session with the configuration this engine assumes.
@@ -45,7 +69,8 @@ def get_spark(app_name: str = "duckdb_geography_spark", cpus: str | int = "*",
         # heap is 1g — fine for sf0.1 fixtures, OOM at sf1+. Only
         # effective when this call actually creates the JVM.
         .config(
-            "spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g")
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(),
         )
     )
     if shuffle_partitions:

@@ -795,7 +795,13 @@ def dim_sample(spark):
 def _plan_nodes(df):
     """Every node of the executed physical plan, through adaptive
     wrappers and query stages."""
-    stack, out = [df._jdf.queryExecution().executedPlan()], []
+    return _subtree(df._jdf.queryExecution().executedPlan())
+
+
+def _subtree(plan):
+    """``plan`` and every node below it, through adaptive wrappers and
+    query stages."""
+    stack, out = [plan], []
     while stack:
         p = stack.pop()
         out.append(p)
@@ -837,19 +843,41 @@ def test_dim_join_level8_matches_brute_force(spark, dim_sample):
     assert sorted(map(tuple, nokey)) == sorted(map(tuple, rows))
 
 
-def test_dim_join_broadcasts_only_longs(spark, dim_sample):
+def _name(node) -> str:
+    return node.getClass().getSimpleName()
+
+
+def _rows_out(node) -> int:
+    return node.metrics().apply("numOutputRows").value()
+
+
+def test_dim_join_plan_has_one_stage_and_no_cell_rows(spark, dim_sample):
+    """The broadcast form runs in the left side's stage: one pandas UDF
+    finds and refines each left row's matches, an explode emits one row
+    per match, and one broadcast hash join brings the right columns
+    back from a broadcast of one row per dimension row."""
     pts, dim, truth = dim_sample
     got = J.spatial_join(pts, dim, left_key="pid", right_key="name")
-    assert got.count() == len(truth)  # executes, so the plan is final
-    bcasts = _broadcasts(got)
-    cell_side = [cols for cols, _ in bcasts if "__cell" in cols]
-    assert cell_side == [{"__ri": "long", "__cell": "long"}]
-    # neither broadcast runs a covering (or any Python) UDF
-    assert bcasts and not any(py for _, py in bcasts)
-    # the candidate dedup keeps its explicit partition count, so the
-    # refine after it runs in parallel tasks
-    plan = got._jdf.queryExecution().executedPlan().toString()
-    assert "REPARTITION_BY_NUM" in plan
+    assert len(got.collect()) == len(truth)  # runs this plan: final, with metrics
+    nodes = _plan_nodes(got)
+    # no per-cell rows anywhere: no node carries a cell column
+    for node in nodes:
+        attrs = node.output()
+        assert "__cell" not in {attrs.apply(i).name() for i in range(attrs.size())}
+    # the only broadcast holds one row per dimension row, and no
+    # broadcast runs Python
+    bcasts = [n for n in nodes if _name(n) == "BroadcastExchangeExec"]
+    assert len(bcasts) == 1
+    assert _rows_out(bcasts[0]) == len(DIM_COUNTRIES)
+    assert "EvalPython" not in bcasts[0].toString()
+    # no exchange below the join-back but its own broadcast
+    (join,) = [n for n in nodes if _name(n) == "BroadcastHashJoinExec"]
+    below = _subtree(join)
+    assert {_name(n) for n in below if "Exchange" in _name(n)} == {"BroadcastExchangeExec"}
+    # one Python UDF finds the matches; the explode emits only them
+    assert join.toString().count("s2_dim_probe(") == 1
+    (gen,) = [n for n in below if _name(n) == "GenerateExec"]
+    assert _rows_out(gen) == len(truth)
 
 
 def test_second_dim_join_one_job_no_right_covering(spark, dim_sample):
@@ -910,6 +938,117 @@ def test_dim_join_edge_rows_match_shuffle_form(spark, dim_sample):
     assert got == want and {r[2] for r in got} == {0, 1, 2, 4}
     empty = J.covering_join(pts, right.limit(0), broadcast_right=True, **kw)
     assert empty.columns == sh.columns and empty.count() == 0
+
+
+def _probe_points(parts, rng):
+    """Unit vectors that stress a point-in-shape test against ``parts``:
+    every vertex, every edge midpoint, the antipodes of some vertices,
+    points just off the edges, and seeded points near the shape and
+    over the sphere."""
+    import numpy as np
+
+    chains = [r for rings in parts.polygons for r in rings]
+    ends = [np.roll(r, -1, axis=0) for r in chains]
+    chains += [l[:-1] for l in parts.lines if len(l) > 1]
+    ends += [l[1:] for l in parts.lines if len(l) > 1]
+    xs = [parts.points] + [l for l in parts.lines]
+    for a, b in zip(chains, ends):
+        mid = a + b
+        mid /= np.linalg.norm(mid, axis=1)[:, None]
+        off = mid + rng.normal(0.0, 1e-9, mid.shape)
+        xs += [a, mid, off / np.linalg.norm(off, axis=1)[:, None], -a[:5]]
+    near = np.concatenate([x for x in xs if len(x)])
+    near = near[rng.integers(0, len(near), 200)] + rng.normal(0.0, 0.01, (200, 3))
+    uni = rng.normal(size=(200, 3))
+    xs += [near, uni]
+    out = np.concatenate([x for x in xs if len(x)])
+    return out / np.linalg.norm(out, axis=1)[:, None]
+
+
+#: right geographies beyond the countries: a polygon with a hole, one
+#: across the antimeridian, a line and a multipoint
+KERNEL_SHAPES = (
+    "POLYGON ((10 10, 30 10, 30 30, 10 30, 10 10), (15 15, 15 25, 25 25, 25 15, 15 15))",
+    "POLYGON ((170 -20, -170 -20, -170 -5, 170 -5, 170 -20))",
+    "LINESTRING (-60 -10, -40 5, 175 40, -175 41)",
+    "MULTIPOINT ((0 0), (179.999 -33), (-45 60))",
+)
+
+
+def test_batched_covers_kernel_matches_per_point():
+    """ops._covers_points decides every point as the per-point
+    _covers_point does, and every cell-center point as ops.intersects
+    does: vertices, edge midpoints, points just off the edges, inside a
+    hole, antipodes, across the antimeridian and seeded points."""
+    import numpy as np
+
+    from duckdb_geography_spark.geo import ops
+    from duckdb_geography_spark.geo.geography import Geography, from_wkt
+    from duckdb_geography_spark.s2 import cellmath as cm
+
+    shapes = [D.s2_data_country(n) for n in DIM_COUNTRIES]
+    shapes += [from_wkt(w).encode() for w in KERNEL_SHAPES]
+    rng = np.random.default_rng(20261019)
+    for blob in shapes:
+        g = Geography.decode(blob)
+        parts = ops.parts_of(g)
+        xs = _probe_points(parts, rng)
+        got = ops._covers_points(parts, xs)
+        want = np.array([ops._covers_point(parts, x) for x in xs])
+        assert np.array_equal(got, want), blob[:40]
+        assert 0 < want.sum() < len(xs)
+        # the same points snapped to leaf cell centers, as the join sees them
+        lon, lat = np.degrees(np.arctan2(xs[:, 1], xs[:, 0])), np.degrees(np.arcsin(xs[:, 2]))
+        ids = cm.lonlat_to_cellid(lon, lat)
+        got = ops._covers_points(parts, np.stack(cm.cellid_to_center_xyz(ids), axis=1))
+        want = np.array([ops.intersects(Geography.cell_center(c), g) for c in ids])
+        assert np.array_equal(got, want), blob[:40]
+
+
+def test_dim_join_left_edge_rows(spark, dim_sample):
+    """Left rows the batched refine does not take (NULL, empty, an
+    invalid cell id, a multipoint, a polygon) match as ops.intersects
+    says, next to cell-center points. Left keys are not used on this
+    path: two rows with one key each keep their own matches."""
+    import struct
+
+    from duckdb_geography_spark.geo import ops
+    from duckdb_geography_spark.geo.geography import KIND_CELL_CENTER, Geography, from_wkt
+
+    _, dim, _ = dim_sample
+    right = [(r["name"], bytes(r["geog"])) for r in dim.collect()]
+    lefts = [
+        None,
+        from_wkt("POINT EMPTY").encode(),
+        from_wkt("POLYGON EMPTY").encode(),
+        struct.pack("<BBHQ", KIND_CELL_CENTER, 0, 1, 0),  # invalid cell id
+        from_wkt("MULTIPOINT ((12.5 41.9), (139.7 35.7), (0 -60))").encode(),
+        from_wkt("POLYGON ((5 44, 9 44, 9 48, 5 48, 5 44))").encode(),  # France/Italy
+        from_wkt("POLYGON ((178 -18, -179 -18, -179 -16, 178 -16, 178 -18))").encode(),
+        from_wkt("LINESTRING (-75 -40, -70 -10)").encode(),
+        from_wkt("POINT (12.5 41.9)").encode(),
+        from_wkt("POINT (-70.6 -33.4)").encode(),
+    ]
+    rows = [(i, b) for i, b in enumerate(lefts)]
+    rows += [(5, lefts[5]), (9, lefts[9])]  # duplicate keys, same geographies
+    left = spark.createDataFrame(rows, "pid long, geog binary")
+    want = sorted(
+        (pid, name)
+        for pid, b in rows
+        if b is not None
+        for name, rb in right
+        if ops.intersects(Geography.decode(b), Geography.decode(rb))
+    )
+    assert {p for p, _ in want} == {4, 5, 6, 7, 8, 9}
+    for pred_join in (
+        lambda: J.covering_join(left, dim, level=5, left_key="pid", broadcast_right=True),
+        lambda: J.covering_join(left, dim, level=5, broadcast_right=True),
+        lambda: J.spatial_join(left, dim, level=5, left_key="pid"),
+    ):
+        got = sorted((r["pid"], r["name"]) for r in pred_join().collect())
+        assert got == want
+    # the duplicate keys' rows are not merged: each row keeps its matches
+    assert want.count((9, "Chile")) == 2 and want.count((5, "France")) == 2
 
 
 def test_fixed_level_cell_center_kernel_matches_coverer():
