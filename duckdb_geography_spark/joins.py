@@ -295,9 +295,7 @@ def _dim_probe_udf(cells: np.ndarray, owner: np.ndarray, blobs, predicate: str, 
         batched = np.zeros(len(row), dtype=bool)
         if exact is ops.intersects:
             centers, ids = _cell_centers(s)
-            is_center = np.zeros(len(s), dtype=bool)
-            is_center[centers] = True
-            batched = is_center[row]
+            batched = np.isin(row, centers)
         if batched.any():
             xyz = np.zeros((len(s), 3))
             xyz[centers] = np.stack(cm.cellid_to_center_xyz(ids), axis=1)
