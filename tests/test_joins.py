@@ -942,9 +942,9 @@ def test_dim_join_edge_rows_match_shuffle_form(spark, dim_sample):
 
 def _probe_points(parts, rng):
     """Unit vectors that stress a point-in-shape test against ``parts``:
-    every vertex, every edge midpoint, the antipodes of some vertices,
-    points just off the edges, and seeded points near the shape and
-    over the sphere."""
+    vertices and edge midpoints (40 edges of up to 6 chains), the antipodes
+    of some vertices, points just off the edges, and seeded points near
+    the shape and over the sphere."""
     import numpy as np
 
     chains = [r for rings in parts.polygons for r in rings]
@@ -952,7 +952,10 @@ def _probe_points(parts, rng):
     chains += [l[:-1] for l in parts.lines if len(l) > 1]
     ends += [l[1:] for l in parts.lines if len(l) > 1]
     xs = [parts.points] + [l for l in parts.lines]
-    for a, b in zip(chains, ends):
+    for c in rng.choice(len(chains), min(len(chains), 6), replace=False):
+        a, b = chains[c], ends[c]
+        pick = np.sort(rng.choice(len(a), min(len(a), 40), replace=False))
+        a, b = a[pick], b[pick]
         mid = a + b
         mid /= np.linalg.norm(mid, axis=1)[:, None]
         off = mid + rng.normal(0.0, 1e-9, mid.shape)
@@ -986,23 +989,22 @@ def test_batched_covers_kernel_matches_per_point():
     from duckdb_geography_spark.geo.geography import Geography, from_wkt
     from duckdb_geography_spark.s2 import cellmath as cm
 
-    shapes = [D.s2_data_country(n) for n in DIM_COUNTRIES]
-    shapes += [from_wkt(w).encode() for w in KERNEL_SHAPES]
+    wkts = D._countries_pdf().set_index("name").loc[list(DIM_COUNTRIES), "geog_wkt"]
     rng = np.random.default_rng(20261019)
-    for blob in shapes:
-        g = Geography.decode(blob)
+    for wkt in [*wkts, *KERNEL_SHAPES]:
+        g = from_wkt(wkt)
         parts = ops.parts_of(g)
         xs = _probe_points(parts, rng)
         got = ops._covers_points(parts, xs)
         want = np.array([ops._covers_point(parts, x) for x in xs])
-        assert np.array_equal(got, want), blob[:40]
+        assert np.array_equal(got, want), wkt[:40]
         assert 0 < want.sum() < len(xs)
         # the same points snapped to leaf cell centers, as the join sees them
         lon, lat = np.degrees(np.arctan2(xs[:, 1], xs[:, 0])), np.degrees(np.arcsin(xs[:, 2]))
         ids = cm.lonlat_to_cellid(lon, lat)
         got = ops._covers_points(parts, np.stack(cm.cellid_to_center_xyz(ids), axis=1))
         want = np.array([ops.intersects(Geography.cell_center(c), g) for c in ids])
-        assert np.array_equal(got, want), blob[:40]
+        assert np.array_equal(got, want), wkt[:40]
 
 
 def test_dim_join_left_edge_rows(spark, dim_sample):
