@@ -193,20 +193,11 @@ def winding_number(x: np.ndarray, ring_xyz: np.ndarray) -> int:
     """Winding of a closed ring around point x (tangent-plane angles).
 
     +-1 when x is enclosed, 0 outside. Points very near the boundary
-    are resolved by :func:`point_on_segment` in callers.
+    are resolved by :func:`point_on_segment` in callers. One row of
+    :func:`winding_numbers`, so a point decides alike alone or in a
+    batch.
     """
-    # tangent-plane directions of each vertex as seen from x
-    # an elementwise dot, not BLAS: winding_numbers repeats it bit for bit
-    d = ring_xyz - np.outer(_dot(ring_xyz, x), x)
-    norms = np.linalg.norm(d, axis=1)
-    if np.any(norms < 1e-14):
-        return 1  # a vertex coincides with x -> treat as contained (CLOSED)
-    d = d / norms[:, None]
-    d_next = np.roll(d, -1, axis=0)
-    cosang = np.clip(np.einsum("ij,ij->i", d, d_next), -1.0, 1.0)
-    sinang = np.einsum("ij,ij->i", np.cross(d, d_next), np.broadcast_to(x, d.shape))
-    total = np.sum(np.arctan2(sinang, cosang))
-    return int(np.round(total / (2.0 * np.pi)))
+    return int(winding_numbers(x[None, :], ring_xyz)[0])
 
 
 def ring_orientation(ring_xyz: np.ndarray) -> int:
@@ -262,14 +253,17 @@ _PAIR_BLOCK = 1 << 20
 
 
 def winding_numbers(xs: np.ndarray, ring_xyz: np.ndarray, block: int = _PAIR_BLOCK) -> np.ndarray:
-    """:func:`winding_number` of every point of ``xs`` (m,3) around one
-    ring, as an int array: the same formula, evaluated elementwise over
-    (points, vertices) blocks instead of one point at a time."""
+    """Winding of one closed ring around every point of ``xs`` (m,3),
+    as an int array: +-1 enclosed, 0 outside, and 1 where a vertex
+    coincides with the point (CLOSED). Evaluated over (points,
+    vertices) blocks of at most ``block`` pairs; tests pass a small
+    ``block`` to cross block edges."""
     m, v = len(xs), len(ring_xyz)
     out = np.empty(m, dtype=np.int64)
     rows = max(1, block // max(v, 1))
     for i in range(0, m, rows):
         x = xs[i : i + rows, None, :]
+        # tangent-plane directions of each vertex as seen from x
         d = ring_xyz[None, :, :] - _dot(ring_xyz[None, :, :], x)[:, :, None] * x
         norms = np.linalg.norm(d, axis=2)
         coincide = np.any(norms < 1e-14, axis=1)

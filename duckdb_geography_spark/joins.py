@@ -138,7 +138,8 @@ def _rename_right(left_cols, right: DataFrame, right_geog: str, left_geog: str,
 
 def _collect_dim(right: DataFrame, cap: int):
     """ONE job: ``limit(cap+1)`` collected as Arrow, the side's
-    partitions computed in parallel tasks. Returns ``(n, table)``:
+    partitions computed in parallel tasks (the limit then moves the
+    rows through a single-partition exchange). Returns ``(n, table)``:
     ``n`` counts at most ``cap + 1`` rows, and ``table`` is the right
     side, or None over the cap. Every column of up to ``cap + 1`` rows
     is computed and reaches the driver, so call it only on a side
@@ -164,7 +165,9 @@ def _probe_dim(right: DataFrame, cap: int, upto: int = 0, small: int = -1):
     column-pruned ``limit().count()`` runs first, so an over-cap side
     never has its columns (geography UDFs included) computed. A plan
     that fit before skips the count and is collected in one job;
-    should it have outgrown the cap since, the count runs after all."""
+    should it have outgrown the cap since, the count runs after all.
+    After a count, the side is collected without a limit (and so
+    without the limit's exchange): the count already bounds it."""
     key = right.semanticHash()
     if _dim_fits.get(key):
         n, dim = _collect_dim(right, cap)
@@ -174,10 +177,11 @@ def _probe_dim(right: DataFrame, cap: int, upto: int = 0, small: int = -1):
     n = right.limit(max(cap, upto) + 1).count()
     if n > cap or n <= small:
         return n, None
-    n, dim = _collect_dim(right, cap)
-    if dim is not None:
-        _dim_fits.put(key, True)
-    return n, dim
+    dim = right.toArrow()
+    if dim.num_rows > cap:  # grew between the count and the collect
+        return dim.num_rows, None
+    _dim_fits.put(key, True)
+    return dim.num_rows, dim
 
 
 def _dim_key(value, level: int):
@@ -290,7 +294,9 @@ def _dim_probe_udf(cells: np.ndarray, owner: np.ndarray, blobs, predicate: str, 
         """The exact predicate of each candidate pair. A cell-center
         left row under ``intersects`` is refined in a batch with the
         other candidates of its right row (``ops._covers_points``);
-        any other pair takes ``ops.<predicate>``."""
+        any other pair first meets the blob headers' covering-overlap
+        reject and, past it, ``ops.<predicate>``, as in the predicate
+        UDFs."""
         keep = np.zeros(len(row), dtype=bool)
         batched = np.zeros(len(row), dtype=bool)
         if exact is ops.intersects:
@@ -306,10 +312,16 @@ def _dim_probe_udf(cells: np.ndarray, owner: np.ndarray, blobs, predicate: str, 
                 g = U.decode_cached(blobs[ri[group[0]]])
                 if not g.is_empty():
                     keep[group] = ops._covers_points(ops.parts_of(g), xyz[row[group]])
-        for j in np.flatnonzero(~batched):
-            keep[j] = exact(
-                U.decode_cached(bytes(s.iat[row[j]])), U.decode_cached(blobs[ri[j]])
+        pairs = np.flatnonzero(~batched)
+        if len(pairs):
+            _, overlap = P._batch_overlap(
+                s.iloc[row[pairs]].reset_index(drop=True),
+                pd.Series([blobs[i] for i in ri[pairs]], dtype=object),
             )
+            for j in pairs[overlap]:
+                keep[j] = exact(
+                    U.decode_cached(bytes(s.iat[row[j]])), U.decode_cached(blobs[ri[j]])
+                )
         return keep
 
     def s2_dim_probe(s: pd.Series) -> pd.Series:
@@ -387,7 +399,8 @@ def covering_join(
     one pandas UDF over the left side: per Arrow batch it covers each
     left row, looks its candidates up in the index, refines them (a
     point under ``intersects`` in one batch per right row, anything
-    else pair by pair) and returns the matching right rows, which
+    else pair by pair behind the geographies' header covering-overlap
+    reject) and returns the matching right rows, which
     ``explode`` and a broadcast hash join on one row per right row
     turn into output rows. No exchange runs, so the join's parallelism
     is the left side's partitioning, as for every map-side UDF of this

@@ -985,6 +985,7 @@ def test_batched_covers_kernel_matches_per_point():
     hole, antipodes, across the antimeridian and seeded points."""
     import numpy as np
 
+    from duckdb_geography_spark.geo import geodesy as gd
     from duckdb_geography_spark.geo import ops
     from duckdb_geography_spark.geo.geography import Geography, from_wkt
     from duckdb_geography_spark.s2 import cellmath as cm
@@ -998,6 +999,10 @@ def test_batched_covers_kernel_matches_per_point():
         got = ops._covers_points(parts, xs)
         want = np.array([ops._covers_point(parts, x) for x in xs])
         assert np.array_equal(got, want), wkt[:40]
+        for ring in parts.polygons[0] if parts.polygons else ():
+            # the first polygon's rings, in blocks of 3 points, the last one short
+            blocked = gd.winding_numbers(xs[::4], ring, block=3 * len(ring) + 1)
+            assert np.array_equal(blocked, [gd.winding_number(x, ring) for x in xs[::4]])
         assert 0 < want.sum() < len(xs)
         # the same points snapped to leaf cell centers, as the join sees them
         lon, lat = np.degrees(np.arctan2(xs[:, 1], xs[:, 0])), np.degrees(np.arcsin(xs[:, 2]))
