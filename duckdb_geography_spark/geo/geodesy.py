@@ -151,10 +151,17 @@ def segments_cross(a0, a1, b0, b1) -> np.ndarray:
     (CLOSED-model friendly, matching the reference's configured
     polygon/polyline models, src/include/global_options.hpp:11-14).
     """
-    d1 = _det3(a0, a1, b0)
-    d2 = _det3(a0, a1, b1)
-    d3 = _det3(b0, b1, a0)
-    d4 = _det3(b0, b1, a1)
+    return segments_cross_n(a0, a1, cross3(a0, a1), b0, b1, cross3(b0, b1))
+
+
+def segments_cross_n(a0, a1, na, b0, b1, nb) -> np.ndarray:
+    """:func:`segments_cross` given the normals ``na = a0 x a1`` and
+    ``nb = b0 x b1``, for callers that test one segment against many:
+    the same arithmetic, with each normal computed once."""
+    d1 = _dot(na, b0)
+    d2 = _dot(na, b1)
+    d3 = _dot(nb, a0)
+    d4 = _dot(nb, a1)
     proper = (d1 * d2 < 0) & (d3 * d4 < 0)
     # the two candidate crossing points are +-(n1 x n2); require one of
     # them to lie on both arcs (rules out antipodal false positives)
@@ -169,9 +176,7 @@ def segments_cross(a0, a1, b0, b1) -> np.ndarray:
 
 
 def _same_hemisphere(a0, a1, b0, b1) -> np.ndarray:
-    mid_a = a0 + a1
-    mid_b = b0 + b1
-    return np.einsum("...i,...i->...", mid_a, mid_b) > 0
+    return _dot(a0 + a1, b0 + b1) > 0
 
 
 def _touch_on_arc(a0, a1, b0, b1) -> np.ndarray:

@@ -869,7 +869,11 @@ def bounds_rect(g: Geography) -> Tuple[float, float, float, float]:
     # latitude tracked in RADIANS with S2LatLng::Latitude's exact form
     # (atan2(z, sqrt(x^2+y^2))), converted to degrees only at the end —
     # this reproduces the reference's published decimals vertex-for-
-    # vertex (e.g. Greenland's 83.64513000000002 in bounds.test:81)
+    # vertex (e.g. Greenland's 83.64513000000002 in bounds.test:81).
+    # Two atan2s feed the min/max and both are kept, since they can
+    # differ in the last bit: np.arctan2 for every vertex (here), and
+    # math.atan2 for every edge endpoint and for each edge apex that
+    # lies on its arc (below, and in _edge_lat_extremes_rad).
     lat_r = np.arctan2(verts[:, 2], np.sqrt(verts[:, 0] ** 2 + verts[:, 1] ** 2))
     lat_lo_r, lat_hi_r = float(np.min(lat_r)), float(np.max(lat_r))
     # longitude interval: union of per-EDGE spans (S2 RectBounder's
@@ -884,16 +888,21 @@ def bounds_rect(g: Geography) -> Tuple[float, float, float, float]:
             lng_int = span if lng_int is None else lng_int.union(span)
     # edge bulge: a geodesic edge can reach beyond its endpoint latitudes
     has_edges = False
-    for a0, a1 in parts.edges():
-        for i in range(len(a0)):
-            has_edges = True
+    for chain in _edge_chains(parts):
+        has_edges = True
+        lngs, lats = [], []
+        for x, y, z in chain.tolist():
+            lngs.append(math.degrees(math.atan2(y, x)))
+            lats.append(math.atan2(z, math.sqrt(x * x + y * y)))
+        lat_lo_r = min(lat_lo_r, min(lats))
+        lat_hi_r = max(lat_hi_r, max(lats))
+        a0, a1 = chain[:-1], chain[1:]
+        for i in np.flatnonzero(_apex_may_lie_on_edge(a0, a1)).tolist():
             lo, hi = _edge_lat_extremes_rad(a0[i], a1[i])
             lat_lo_r = min(lat_lo_r, lo)
             lat_hi_r = max(lat_hi_r, hi)
-            span = _LngInterval.from_point_pair(
-                math.degrees(math.atan2(a0[i][1], a0[i][0])),
-                math.degrees(math.atan2(a1[i][1], a1[i][0])),
-            )
+        for i in range(len(chain) - 1):
+            span = _LngInterval.from_point_pair(lngs[i], lngs[i + 1])
             lng_int = span if lng_int is None else lng_int.union(span)
     if lng_int is None:  # no points, no edges
         return EMPTY_RECT
@@ -917,6 +926,39 @@ def bounds_rect(g: Geography) -> Tuple[float, float, float, float]:
             lat_lo = -90.0
             lng_int = _LngInterval(-180.0, 180.0)
     return (lng_int.lo, lat_lo, lng_int.hi, lat_hi)
+
+
+def _edge_chains(parts: "_Parts") -> List[np.ndarray]:
+    """The vertices of each line (2+ vertices) and of each ring closed
+    by its first vertex: edge k of a chain runs from vertex k to k+1,
+    as in :meth:`_Parts.edges`."""
+    out = [l for l in parts.lines if len(l) >= 2]
+    for rings in parts.polygons:
+        out += [np.concatenate([r, r[:1]]) for r in rings]
+    return out
+
+
+#: slack of the apex screen on the unit tangent's z-component
+_APEX_SLACK = 1e-9
+
+
+def _apex_may_lie_on_edge(a: np.ndarray, b: np.ndarray) -> np.ndarray:
+    """(m,) bool: the great circle's northernmost or southernmost point
+    may lie on edge a-b. Along an arc shorter than pi the latitude has
+    an interior extreme only where the tangent's z-component changes
+    sign, so edges whose end tangents clearly share a sign are screened
+    out; near-degenerate edges always pass to the exact scalar test."""
+    n = gd.cross3(a, b)
+    nn = gd._dot(n, n)
+    with np.errstate(divide="ignore", invalid="ignore"):
+        scale = 1.0 / np.sqrt(nn)
+    # z-component of the unit tangent n x p at each end
+    ga = (n[:, 0] * a[:, 1] - n[:, 1] * a[:, 0]) * scale
+    gb = (n[:, 0] * b[:, 1] - n[:, 1] * b[:, 0]) * scale
+    same = ((ga > _APEX_SLACK) & (gb > _APEX_SLACK)) | (
+        (ga < -_APEX_SLACK) & (gb < -_APEX_SLACK)
+    )
+    return (nn < 1e-10) | ~same
 
 
 def _edge_lat_extremes_rad(a: np.ndarray, b: np.ndarray) -> Tuple[float, float]:

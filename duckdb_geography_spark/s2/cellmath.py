@@ -151,20 +151,36 @@ def xyz_to_face_uv(x, y, z):
     return face, u, v
 
 
+#: per face, the (1, u, v) component and the sign of x, y and z — the
+#: standard S2 face layout
+_FACE_AXES = np.array([[0, 1, 2], [1, 0, 2], [1, 2, 0], [0, 2, 1], [2, 0, 1], [2, 1, 0]])
+_FACE_SIGNS = np.array(
+    [[1, 1, 1], [-1, 1, 1], [-1, -1, 1], [-1, -1, -1], [1, -1, -1], [1, 1, -1]], dtype=np.float64
+)
+
+
+def face_uv_to_xyz3(face, u, v) -> np.ndarray:
+    """(face, u, v) -> (..., 3) un-normalized direction vectors; all
+    zeros for a face outside 0..5."""
+    face, u, v = np.broadcast_arrays(
+        np.asarray(face, dtype=np.int64),
+        np.asarray(u, dtype=np.float64),
+        np.asarray(v, dtype=np.float64),
+    )
+    ok = (face >= 0) & (face < 6)
+    f = np.where(ok, face, 0)
+    comps = np.stack([np.ones_like(u), u, v], axis=-1)
+    # sign flips are exact, so this equals placing +-1, +-u, +-v per face
+    out = np.take_along_axis(comps, _FACE_AXES[f], axis=-1) * _FACE_SIGNS[f]
+    if not ok.all():
+        out[~ok] = 0.0
+    return out
+
+
 def face_uv_to_xyz(face, u, v):
-    """(face, u, v) -> un-normalized direction vector."""
-    face = np.asarray(face, dtype=np.int64)
-    u = np.asarray(u, dtype=np.float64)
-    v = np.asarray(v, dtype=np.float64)
-    one = np.ones_like(u)
-    # face axes: x = face-normal direction with u, v axes per S2 layout
-    xs = [one, -u, -u, -one, v, v]
-    ys = [u, one, -v, -v, -one, u]
-    zs = [v, v, one, -u, -u, -one]
-    x = np.select([face == f for f in range(6)], xs)
-    y = np.select([face == f for f in range(6)], ys)
-    z = np.select([face == f for f in range(6)], zs)
-    return x, y, z
+    """(face, u, v) -> un-normalized direction vector (3 arrays)."""
+    out = face_uv_to_xyz3(face, u, v)
+    return out[..., 0], out[..., 1], out[..., 2]
 
 
 def uv_to_st(u):

@@ -11,6 +11,23 @@ S2RegionCoverer port in region_coverer.py and reproduce the
 reference's golden cell lists exactly (Fiji,
 test/sql/geography/bounds.test:8-16). Fixed-level coverings use a
 batched BFS descent.
+
+Both coverers share one kernel, ``_GeogRegion._classify``, which
+decides may-intersect and contains for a whole batch of cells (a
+coverer generation, or a BFS level) in one pass:
+
+- children are derived from their parent's leaf-scale (i, j) square
+  and Hilbert orientation, not decoded from their ids;
+- region vertices are found in a cell by a ``searchsorted`` range on
+  the sorted vertex cells;
+- a cell corner's inside-ness is memoised per (face, i, j), so
+  siblings and parents share it within one covering;
+- each cell tests only the edges that reach it: those kept for its
+  parent, then screened against the cell's bounding cap with a slack
+  far above the arithmetic's rounding. The crossing value of every
+  remaining (cell edge, region edge) pair comes from the same
+  elementwise ``segments_cross``, so no decision depends on the batch
+  a cell is tested in.
 """
 
 from __future__ import annotations
@@ -26,6 +43,18 @@ from . import cellmath as cm
 
 U64 = np.uint64
 _FACE_CELLS = [U64((f << 61) | (1 << 60)) for f in range(6)]
+_FACE_LSB = 1 << 60
+_POS_TO_IJ = cm.POS_TO_IJ.astype(np.int64)
+_POS_TO_ORIENT = cm.POS_TO_ORIENT.astype(np.int64)
+#: cell corners sit on the leaf grid lines 0..MAX_SIZE
+_GRID = cm.MAX_SIZE + 1
+#: slack (radians) of the edge-reaches-cell screen: far above the
+#: rounding of the cap arithmetic and segments_cross's 1e-15 touch
+#: tolerance, so no edge that could test as crossing is screened out
+_REACH_SLACK = 1e-9
+#: edges whose endpoints' sum is shorter than this are nearly
+#: antipodal: their midpoint is ill-conditioned, so they reach every cell
+_MID_MIN = 1e-3
 
 
 def normalize_cell_union(cells) -> np.ndarray:
@@ -36,58 +65,113 @@ def normalize_cell_union(cells) -> np.ndarray:
     arr = arr[cm.is_valid(arr)]
     if arr.size == 0:
         return arr
-    arr = np.unique(arr)  # unsigned sort + dedupe
-    # drop cells contained in a predecessor
-    out: List[np.uint64] = []
-    for c in arr.tolist():
-        c = U64(c)
-        if out and cm.contains(np.array([out[-1]]), np.array([c]))[0]:
-            continue
+    # valid ids as Python ints: a cell spans id -+ (lsb - 1), and its
+    # parent's lsb is 4 times its own
+    out: List[int] = []
+    for c in np.unique(arr).tolist():  # unsigned sort + dedupe
+        if out:
+            lsb = out[-1] & -out[-1]
+            if out[-1] - (lsb - 1) <= c <= out[-1] + (lsb - 1):
+                continue  # contained in a predecessor
         out.append(c)
         # merge complete sibling groups bottom-up
         while len(out) >= 4:
-            last4 = np.array(out[-4:], dtype=np.uint64)
-            lev = cm.level(last4)
-            if lev[0] <= 0 or not (lev == lev[0]).all():
+            last4 = out[-4:]
+            lsb = last4[0] & -last4[0]
+            if lsb == _FACE_LSB or any(x & -x != lsb for x in last4):
                 break
-            parents = cm.parent(last4, np.full(4, lev[0] - 1))
-            if not (parents == parents[0]).all():
-                break
-            # all four children present?
-            kids = {int(cm.child(np.array([parents[0]]), np.array([k]))[0]) for k in range(4)}
-            if {int(v) for v in last4} != kids:
-                break
-            out = out[:-4] + [parents[0]]
+            up = lsb << 2
+            parent = (last4[0] & ~(2 * up - 1)) | up
+            if last4 != [parent - up + lsb * (2 * k + 1) for k in range(4)]:
+                break  # not the parent's four children
+            out[-4:] = [parent]
     return np.array(out, dtype=np.uint64)
+
+
+class _Cells:
+    """A batch of cells with their leaf-scale (i, j) squares and Hilbert
+    orientations, so children come from the parent's square by table
+    lookup instead of a fresh id decode."""
+
+    __slots__ = ("ids", "face", "i", "j", "size", "orient")
+
+    def __init__(self, ids, face, i, j, size, orient):
+        self.ids, self.face, self.i, self.j = ids, face, i, j
+        self.size, self.orient = size, orient
+
+    @classmethod
+    def of(cls, ids) -> "_Cells":
+        ids = np.asarray(ids, dtype=np.uint64)
+        face, i, j, orient = cm.to_face_ij_orientation(ids)
+        lev = cm.level(ids)
+        size = np.int64(1) << (cm.MAX_LEVEL - lev)
+        # the decode walks a non-leaf id's trailing "10 00 .." digits too,
+        # and each "00" swaps the orientation: undo an odd count of them
+        # (S2CellId::ToFaceIJOrientation's lsb mask)
+        orient = orient.astype(np.int64) ^ (((cm.MAX_LEVEL - lev) % 2 == 0) & (lev < cm.MAX_LEVEL))
+        lo = ~(size - 1)
+        return cls(ids, face.astype(np.int64), i.astype(np.int64) & lo,
+                   j.astype(np.int64) & lo, size, orient)
+
+    def __len__(self) -> int:
+        return len(self.ids)
+
+    def take(self, idx) -> "_Cells":
+        return _Cells(self.ids[idx], self.face[idx], self.i[idx], self.j[idx],
+                      self.size[idx], self.orient[idx])
+
+    def children(self) -> "_Cells":
+        """The 4 children of every cell, in child-position order, (4n,)."""
+        k = np.arange(4)
+        ij = _POS_TO_IJ[self.orient[:, None], k]
+        half = (self.size >> 1)[:, None]
+        lsb = cm.lsb(self.ids)[:, None]
+        step = lsb >> U64(2)
+        ids = self.ids[:, None] - lsb + step + (step << U64(1)) * k.astype(np.uint64)
+        return _Cells(
+            ids.ravel(),
+            np.repeat(self.face, 4),
+            (self.i[:, None] + (ij >> 1) * half).ravel(),
+            (self.j[:, None] + (ij & 1) * half).ravel(),
+            np.repeat(half.ravel(), 4),
+            (self.orient[:, None] ^ _POS_TO_ORIENT[k]).ravel(),
+        )
+
+    def corner_keys(self) -> np.ndarray:
+        """(n,4) int64 (face, i, j) key of each corner, CCW from (lo, lo)."""
+        i0, j0 = self.i[:, None], self.j[:, None]
+        s = self.size[:, None]
+        ci = np.concatenate([i0, i0 + s, i0 + s, i0], axis=1)
+        cj = np.concatenate([j0, j0, j0 + s, j0 + s], axis=1)
+        return (self.face[:, None] * _GRID + ci) * _GRID + cj
+
+    def corners(self) -> np.ndarray:
+        """(n,4,3) unit-vector corners, CCW from (u_lo, v_lo)."""
+        n = len(self.ids)
+        lo_hi = np.stack([self.i, self.i + self.size, self.j, self.j + self.size])
+        u_lo, u_hi, v_lo, v_hi = cm.st_to_uv(lo_hi / cm.MAX_SIZE)
+        us = np.stack([u_lo, u_hi, u_hi, u_lo], axis=1)
+        vs = np.stack([v_lo, v_lo, v_hi, v_hi], axis=1)
+        xyz = cm.face_uv_to_xyz3(np.repeat(self.face, 4), us.ravel(), vs.ravel())
+        xyz /= np.linalg.norm(xyz, axis=1)[:, None]
+        return xyz.reshape(n, 4, 3)
 
 
 def cells_corners(cells: np.ndarray) -> np.ndarray:
     """(n,4,3) unit-vector corners for n cells, one batched pass."""
-    n = len(cells)
-    face, i_lo, j_lo, size = cm.cell_ij_bounds(cells)
-    u_lo = cm.st_to_uv(cm.ij_to_st_min(i_lo))
-    u_hi = cm.st_to_uv(cm.ij_to_st_min(i_lo + size))
-    v_lo = cm.st_to_uv(cm.ij_to_st_min(j_lo))
-    v_hi = cm.st_to_uv(cm.ij_to_st_min(j_lo + size))
-    us = np.stack([u_lo, u_hi, u_hi, u_lo], axis=1)  # CCW
-    vs = np.stack([v_lo, v_lo, v_hi, v_hi], axis=1)
-    f4 = np.repeat(face.astype(np.int64), 4)
-    x, y, z = cm.face_uv_to_xyz(f4, us.ravel(), vs.ravel())
-    xyz = np.stack([x, y, z], axis=1)
-    xyz /= np.linalg.norm(xyz, axis=1)[:, None]
-    return xyz.reshape(n, 4, 3)
+    return _Cells.of(cells).corners()
 
 
 class _GeogRegion:
-    """May-intersect oracle for (cell, geography) with no false
-    negatives. All tests run **batched over arrays of cells** — the
-    coverer probes whole frontiers in a handful of numpy calls (the
-    per-cell form was the encode-time hotspot at sf0.1)."""
+    """May-intersect and contains oracle for (cell, geography), with no
+    false negatives for may-intersect. Every test runs batched over
+    arrays of cells through :meth:`_classify`."""
 
     def __init__(self, geog, buffer_radians: float = 0.0):
         self.buffer = buffer_radians
         self._geog = geog
         self._cap = None
+        self._inside = {}  # corner key -> inside the region
         pts = geog.all_points()
         self.vertex_lonlat = [pts] if len(pts) else []
         edges_a, edges_b = [], []
@@ -119,96 +203,166 @@ class _GeogRegion:
                     shell_kept = True
                 elif shell_kept:
                     self.shell_holes[-1].append((xyz, gd.ring_orientation(xyz)))
+        # every shell and hole in one array, with the span of each and
+        # the index of each vertex's successor in its ring
+        flat, nxt, self._ring_spans, at = [], [], [], 0
+        for shell, orient, holes in zip(self.rings_xyz, self.ring_orients, self.shell_holes):
+            group = []
+            for r, o in [(shell, orient)] + holes:
+                flat.append(r)
+                nxt.append(np.roll(np.arange(at, at + len(r)), -1))
+                group.append(((at, at + len(r)), o))
+                at += len(r)
+            self._ring_spans.append((group[0][0], group[0][1], group[1:]))
+        self._ring_all = np.concatenate(flat) if flat else np.empty((0, 3))
+        self._ring_next = np.concatenate(nxt) if nxt else np.empty(0, dtype=np.int64)
         self.edge_a = np.concatenate(edges_a) if edges_a else np.empty((0, 3))
         self.edge_b = np.concatenate(edges_b) if edges_b else np.empty((0, 3))
+        self.edge_n = gd.cross3(self.edge_a, self.edge_b)
+        # each edge lies within half its length of its midpoint
+        mid = self.edge_a + self.edge_b
+        mid_n = np.sqrt(gd._dot(mid, mid))
+        self.edge_mid = mid / np.where(mid_n > 0, mid_n, 1.0)[:, None]
+        self.edge_half = np.where(
+            mid_n >= _MID_MIN, 0.5 * gd.angle(self.edge_a, self.edge_b), np.pi
+        )
         if self.vertex_lonlat:
             allv = np.concatenate(self.vertex_lonlat)
-            self.vertex_cells = cm.lonlat_to_cellid(allv[:, 0], allv[:, 1])
+            self.vertex_cells = np.sort(cm.lonlat_to_cellid(allv[:, 0], allv[:, 1]))
             self.vertex_xyz = gd.lonlat_deg_to_xyz(allv)
         else:
             self.vertex_cells = np.empty(0, dtype=np.uint64)
             self.vertex_xyz = np.empty((0, 3))
 
-    def _cells_corners(self, cells: np.ndarray) -> np.ndarray:
-        """(n,4,3) unit-vector corners for n cells, one batched pass."""
-        return cells_corners(cells)
-
-    @staticmethod
-    def _points_in_ring(P: np.ndarray, ring: np.ndarray, orient) -> np.ndarray:
-        """(p,) bool: batched winding test of points against one ring
-        (vertex coincidence counts as inside)."""
-        proj = P @ ring.T  # (p,r)
-        d = ring[None, :, :] - proj[:, :, None] * P[:, None, :]
-        norms = np.linalg.norm(d, axis=2)
-        deg = norms < 1e-14  # a vertex coincides with the point
-        with np.errstate(invalid="ignore", divide="ignore"):
-            d = d / np.where(norms > 0, norms, 1.0)[:, :, None]
-        d_next = np.roll(d, -1, axis=1)
-        cosang = np.clip(np.einsum("pri,pri->pr", d, d_next), -1.0, 1.0)
-        sinang = np.einsum("pri,pi->pr", np.cross(d, d_next), P)
-        total = np.sum(np.arctan2(sinang, cosang), axis=1)
-        # winding must match the ring's orientation: the antipodal
-        # mirror region winds with the opposite sign and is outside
-        return (total * orient > np.pi) | deg.any(axis=1)
-
     def _points_in_region(self, pts: np.ndarray) -> np.ndarray:
         """(p,) bool: point inside the polygon REGION (shell minus its
-        holes) — the exact test definite-containment needs."""
-        if not self.rings_xyz or not len(pts):
-            return np.zeros(len(pts), dtype=bool)
+        holes) — the exact test definite-containment needs. One winding
+        pass over every ring at once, in blocks of points; elementwise
+        products only, so a point decides alike in any batch."""
         out = np.zeros(len(pts), dtype=bool)
-        for ring, orient, holes in zip(
-            self.rings_xyz, self.ring_orients, self.shell_holes
-        ):
-            todo = ~out
-            if not np.any(todo):
-                break
-            P = pts[todo]
-            inside = self._points_in_ring(P, ring, orient)
-            for hole, ho in holes:
-                if not np.any(inside):
-                    break
-                inside &= ~self._points_in_ring(P, hole, ho)
-            out[np.flatnonzero(todo)[inside]] = True
+        if not self.rings_xyz or not len(pts):
+            return out
+        ring, nxt = self._ring_all, self._ring_next
+        rows = max(1, gd._PAIR_BLOCK // 4 // len(ring))
+        for b in range(0, len(pts), rows):
+            P = pts[b : b + rows, None, :]
+            d = ring[None, :, :] - gd._dot(P, ring[None, :, :])[:, :, None] * P
+            norms = np.linalg.norm(d, axis=2)
+            deg = norms < 1e-14  # a vertex coincides with the point
+            with np.errstate(invalid="ignore", divide="ignore"):
+                d = d / np.where(norms > 0, norms, 1.0)[:, :, None]
+            d_next = d[:, nxt]
+            cosang = np.clip(gd._dot(d, d_next), -1.0, 1.0)
+            ang = np.arctan2(gd._dot(gd.cross3(d, d_next), P), cosang)
+
+            def inside(span, orient):
+                # winding must match the ring's orientation: the antipodal
+                # mirror region winds with the opposite sign and is outside
+                s, e = span
+                total = np.sum(ang[:, s:e], axis=1)
+                return (total * orient > np.pi) | deg[:, s:e].any(axis=1)
+
+            hit = out[b : b + rows]
+            for shell, orient, holes in self._ring_spans:
+                got = inside(shell, orient)
+                for hole, ho in holes:
+                    got &= ~inside(hole, ho)
+                hit |= got
         return out
 
-    def may_intersect_batch(self, cells: np.ndarray) -> np.ndarray:
-        cells = np.asarray(cells, dtype=np.uint64)
+    def _corners_inside(self, keys: np.ndarray, corners: np.ndarray) -> np.ndarray:
+        """(m,4) bool inside-ness of the corners, memoised by corner key:
+        a corner's position depends on its key alone."""
+        uk, first, inv = np.unique(keys.ravel(), return_index=True, return_inverse=True)
+        ul = uk.tolist()
+        memo = self._inside
+        vals = np.array([memo.get(k, 2) for k in ul], dtype=np.int8)
+        miss = np.flatnonzero(vals == 2)
+        if len(miss):
+            got = self._points_in_region(corners.reshape(-1, 3)[first[miss]])
+            vals[miss] = got
+            memo.update(zip(uk[miss].tolist(), got.tolist()))
+        return vals[inv].reshape(keys.shape).astype(bool)
+
+    def _vertex_in(self, ids: np.ndarray) -> np.ndarray:
+        """(n,) bool: some region vertex lies in the cell."""
+        vc = self.vertex_cells
+        if not vc.size:
+            return np.zeros(len(ids), dtype=bool)
+        lo = np.searchsorted(vc, cm.range_min(ids), side="left")
+        hi = np.searchsorted(vc, cm.range_max(ids), side="right")
+        return hi > lo
+
+    def all_edges(self, n: int):
+        """(cell, edge) pairs naming every edge for each of n cells."""
+        e = len(self.edge_a)
+        return np.repeat(np.arange(n), e), np.tile(np.arange(e), n)
+
+    def _classify(self, cells: _Cells, pair_cell, pair_edge, want_contains=True):
+        """(may_intersect, contains, kept pairs) for a batch of cells.
+
+        ``(pair_cell, pair_edge)`` name, for each cell, a superset of the
+        region edges that reach it (its parent's kept edges, or all).
+        The kept pairs are those whose edge reaches the cell's bounding
+        cap: the superset to hand to the cell's children.
+        ``contains`` is exact only where ``want_contains``."""
         n = len(cells)
-        hit = np.zeros(n, dtype=bool)
-        if self.vertex_cells.size:
-            lo = cm.range_min(cells)[:, None]
-            hi = cm.range_max(cells)[:, None]
-            vc = self.vertex_cells[None, :]
-            hit |= np.any((lo <= vc) & (vc <= hi), axis=1)
-        if np.all(hit):
-            return hit
-        corners = self._cells_corners(cells)  # (n,4,3)
-        if self.buffer > 0.0:
-            return hit | self._within_buffer_batch(cells, corners, ~hit)
-        todo = ~hit
-        if self.rings_xyz and np.any(todo):
-            flat = corners[todo].reshape(-1, 3)
-            # region (shell minus holes): a cell whose corners are all
-            # inside a hole does NOT intersect — shell-only testing
-            # would cover hole interiors (S2Polygon.MayIntersect parity;
-            # cells straddling a hole boundary are caught by the edge-
-            # crossing and vertex tests)
-            inside = self._points_in_region(flat).reshape(-1, 4).any(axis=1)
-            hit[np.flatnonzero(todo)[inside]] = True
-        todo = ~hit
-        if len(self.edge_a) and np.any(todo):
-            idx = np.flatnonzero(todo)
-            c0 = corners[todo]  # (t,4,3)
-            c1 = np.roll(c0, -1, axis=1)
-            crosses = gd.segments_cross(
-                c0[:, :, None, :],
-                c1[:, :, None, :],
-                self.edge_a[None, None, :, :],
-                self.edge_b[None, None, :, :],
+        vin = self._vertex_in(cells.ids)
+        corners = cells.corners()
+        if len(pair_cell):
+            center = corners.sum(axis=1)
+            center /= np.linalg.norm(center, axis=1)[:, None]
+            radius = np.max(gd.angle(center[:, None, :], corners), axis=1)
+            keep = gd.angle(self.edge_mid[pair_edge], center[pair_cell]) <= (
+                self.edge_half[pair_edge] + radius[pair_cell] + _REACH_SLACK
             )
-            hit[idx[crosses.any(axis=(1, 2))]] = True
-        return hit
+            pair_cell, pair_edge = pair_cell[keep], pair_edge[keep]
+        any_in = np.zeros(n, dtype=bool)
+        all_in = np.zeros(n, dtype=bool)
+        buffered = self.buffer > 0.0
+        if self.rings_xyz and (want_contains or not buffered):
+            rows = np.flatnonzero(~vin)
+            if len(rows):
+                inside = self._corners_inside(cells.take(rows).corner_keys(), corners[rows])
+                any_in[rows] = inside.any(axis=1)
+                all_in[rows] = inside.all(axis=1)
+        # crossings decide may-intersect where no vertex or corner did,
+        # and contains where every corner is inside
+        need = np.zeros(n, dtype=bool) if buffered else ~any_in
+        if want_contains:
+            need |= all_in
+        need &= ~vin
+        cross = np.zeros(n, dtype=bool)
+        if len(pair_cell) and np.any(need):
+            sel = need[pair_cell]
+            pc, pe = pair_cell[sel], pair_edge[sel]
+            c1 = np.roll(corners, -1, axis=1)
+            cn = gd.cross3(corners, c1)
+            hit = gd.segments_cross_n(
+                corners[pc], c1[pc], cn[pc],
+                self.edge_a[pe][:, None, :], self.edge_b[pe][:, None, :],
+                self.edge_n[pe][:, None, :],
+            ).any(axis=1)
+            cross[pc[hit]] = True
+        contains = ~vin & all_in & ~cross
+        if buffered:
+            may = vin | self._within_buffer_batch(cells.ids, corners, ~vin)
+        else:
+            may = vin | any_in | cross
+        return may, contains, (pair_cell, pair_edge)
+
+    def _classify_ids(self, cells: np.ndarray):
+        cells = np.asarray(cells, dtype=np.uint64)
+        return self._classify(_Cells.of(cells), *self.all_edges(len(cells)))
+
+    def may_intersect_batch(self, cells: np.ndarray) -> np.ndarray:
+        return self._classify_ids(cells)[0]
+
+    def contains_cell_batch(self, cells: np.ndarray) -> np.ndarray:
+        """Cell fully inside the region (polygons only): all corners
+        inside a shell, no region vertex inside the cell, no edge
+        crossings."""
+        return self._classify_ids(cells)[1]
 
     def _within_buffer_batch(self, cells, corners, todo) -> np.ndarray:
         """Buffered test: center inside a polygon OR center-to-boundary
@@ -235,43 +389,6 @@ class _GeogRegion:
             out[idx[dmin <= self.buffer + circum]] = True
         return out
 
-    def contains_cell_batch(self, cells: np.ndarray) -> np.ndarray:
-        """Cell fully inside the region (polygons only): all corners
-        inside a shell, no region vertex inside the cell, no edge
-        crossings."""
-        cells = np.asarray(cells, dtype=np.uint64)
-        n = len(cells)
-        if not self.rings_xyz:
-            return np.zeros(n, dtype=bool)
-        ok = np.ones(n, dtype=bool)
-        if self.vertex_cells.size:
-            lo = cm.range_min(cells)[:, None]
-            hi = cm.range_max(cells)[:, None]
-            vc = self.vertex_cells[None, :]
-            ok &= ~np.any((lo <= vc) & (vc <= hi), axis=1)
-        if not np.any(ok):
-            return ok
-        corners = self._cells_corners(cells)
-        idx = np.flatnonzero(ok)
-        flat = corners[ok].reshape(-1, 3)
-        # definite containment must respect holes: a cell whose corners
-        # sit inside a shell may still be entirely inside a hole
-        inside = self._points_in_region(flat).reshape(-1, 4).all(axis=1)
-        ok[idx[~inside]] = False
-        todo = ok
-        if len(self.edge_a) and np.any(todo):
-            idx = np.flatnonzero(todo)
-            c0 = corners[todo]
-            c1 = np.roll(c0, -1, axis=1)
-            crosses = gd.segments_cross(
-                c0[:, :, None, :],
-                c1[:, :, None, :],
-                self.edge_a[None, None, :, :],
-                self.edge_b[None, None, :, :],
-            )
-            ok[idx[crosses.any(axis=(1, 2))]] = False
-        return ok
-
     def cap_bound(self):
         """S2LatLngRect::GetCapBound port over the geography's bounds
         rect -> (center_xyz, radius_radians)."""
@@ -281,9 +398,6 @@ class _GeogRegion:
             rect = _ops.bounds_rect(self._geog)
             self._cap = _rect_cap_bound(rect)
         return self._cap
-
-    def may_intersect(self, cell) -> bool:
-        return bool(self.may_intersect_batch(np.array([cell], dtype=np.uint64))[0])
 
 
 def covering_of_encoded(
@@ -487,13 +601,6 @@ def covering_of_geography(
     return out
 
 
-def _children_batch(cells: np.ndarray) -> np.ndarray:
-    """All 4 children of each cell, flattened (4n,)."""
-    cells = np.repeat(np.asarray(cells, dtype=np.uint64), 4)
-    ks = np.tile(np.arange(4), len(cells) // 4)
-    return cm.child(cells, ks)
-
-
 class CoveringOverflowError(ValueError):
     """A fixed-level covering exceeded the cell cap.
 
@@ -517,24 +624,38 @@ class CoveringOverflowError(ValueError):
         )
 
 
+def _keep(cells: _Cells, mask, pairs):
+    """The cells under ``mask`` and their (cell, edge) pairs, renumbered."""
+    pair_cell, pair_edge = pairs
+    sel = mask[pair_cell]
+    return cells.take(mask), ((np.cumsum(mask) - 1)[pair_cell[sel]], pair_edge[sel])
+
+
+def _child_pairs(pairs):
+    """Each (cell, edge) pair handed to the cell's 4 children."""
+    pair_cell, pair_edge = pairs
+    return (4 * pair_cell[:, None] + np.arange(4)).ravel(), np.repeat(pair_edge, 4)
+
+
 def _fixed_level_covering(region: _GeogRegion, level: int, cap: int = 16384) -> np.ndarray:
-    """Batched BFS descent keeping only intersecting cells. All cells in
-    the result are exactly at ``level`` (the equi-join key contract).
-    Raises CoveringOverflowError if the covering cannot fit in ``cap``
-    cells at that level."""
-    faces = np.array(_FACE_CELLS, dtype=np.uint64)
-    frontier = faces[region.may_intersect_batch(faces)]
+    """Batched BFS descent keeping only intersecting cells, one
+    ``_classify`` call per level. All cells in the result are exactly at
+    ``level`` (the equi-join key contract). Raises CoveringOverflowError
+    if the covering cannot fit in ``cap`` cells at that level."""
+    cells = _Cells.of(np.array(_FACE_CELLS, dtype=np.uint64))
+    may, _, pairs = region._classify(cells, *region.all_edges(len(cells)), want_contains=False)
+    cells, pairs = _keep(cells, may, pairs)
     suggested = 0
     for _lev in range(0, level):
-        if not len(frontier):
+        if not len(cells):
             break
-        kids = _children_batch(frontier)
-        kids = kids[region.may_intersect_batch(kids)]
-        if len(kids) > cap:
+        kids = cells.children()
+        may, _, pairs = region._classify(kids, *_child_pairs(pairs), want_contains=False)
+        if np.count_nonzero(may) > cap:
             raise CoveringOverflowError(level, suggested, cap)
         suggested = _lev + 1
-        frontier = kids
-    return np.unique(frontier)
+        cells, pairs = _keep(kids, may, pairs)
+    return np.unique(cells.ids)
 
 
 def _rect_cap_bound(rect):

@@ -7,10 +7,13 @@ terminal detection via region containment — so that ``s2_covering``
 output can match the reference's golden cell lists
 (test/sql/geography/bounds.test:8-16).
 
-Region interface (duck-typed): ``may_intersect_batch(cells)``,
-``contains_cell_batch(cells)``, ``cap_bound() -> (center_xyz,
-radius_radians)``. ``_GeogRegion`` in s2/coverer.py provides the
-first; this module adds the rest.
+The coverer works by generation: the initial candidates, and the
+children a popped candidate is about to add, have their own children
+classified in one call to the region's ``_classify`` (``_GeogRegion``
+in s2/coverer.py). Each child tests only the region edges that reach
+its parent, which the candidate carries. The tests are pure functions
+of the cell, so S2's priority order and budget test see exactly the
+values the one-cell-at-a-time loop did.
 """
 
 from __future__ import annotations
@@ -21,7 +24,6 @@ from typing import List, Optional
 
 import numpy as np
 
-from ..geo import geodesy as gd
 from . import cellmath as cm
 
 U64 = np.uint64
@@ -44,7 +46,7 @@ def vertex_neighbors(cell: np.uint64, level: int) -> List[np.uint64]:
     (coarser than this cell) touching this cell's closest vertex."""
     arr = np.array([cell], dtype=np.uint64)
     face, i, j, _ = cm.to_face_ij_orientation(arr)
-    face_i, i_i, j_i = int(face[0]), int(i[0]), int(j[0])
+    i_i, j_i = int(i[0]), int(j[0])
     halfsize = 1 << (MAX_LEVEL - level - 1)
     size = halfsize * 2
     if i_i & halfsize:
@@ -55,38 +57,49 @@ def vertex_neighbors(cell: np.uint64, level: int) -> List[np.uint64]:
         joffset, jsame = size, (j_i + size) < cm.MAX_SIZE
     else:
         joffset, jsame = -size, (j_i - size) >= 0
-    out = [U64(cm.parent(arr, np.array([level]))[0])]
-    out.append(_from_ij_same_parent(face_i, i_i + ioffset, j_i, isame, level))
-    out.append(_from_ij_same_parent(face_i, i_i, j_i + joffset, jsame, level))
+    ii = [i_i + ioffset, i_i]
+    jj = [j_i, j_i + joffset]
     if isame or jsame:
-        out.append(
-            _from_ij_same_parent(face_i, i_i + ioffset, j_i + joffset, isame and jsame, level)
-        )
-    return out
-
-
-def _from_ij_same_parent(face: int, i: int, j: int, same_face: bool, level: int) -> np.uint64:
-    if same_face:
-        leaf = cm.from_face_ij(
-            np.array([face], dtype=np.uint64),
-            np.array([i], dtype=np.uint64),
-            np.array([j], dtype=np.uint64),
-        )
-    else:
-        leaf = cm._from_face_ij_wrap(
-            np.array([face]), np.array([i]), np.array([j])
-        )
-    return U64(cm.parent(leaf, np.array([level]))[0])
+        ii.append(i_i + ioffset)
+        jj.append(j_i + joffset)
+    # off-face (i, j) wrap onto the neighboring face; on-face ones are
+    # plain from_face_ij
+    leaves = cm._from_face_ij_wrap(np.full(len(ii), int(face[0])), np.array(ii), np.array(jj))
+    cells = cm.parent(np.concatenate([arr, leaves]), np.full(len(ii) + 1, level))
+    return [U64(c) for c in cells]
 
 
 class _Candidate:
-    __slots__ = ("cell", "level", "is_terminal", "children")
+    __slots__ = ("row", "level", "is_terminal", "children", "edges")
 
-    def __init__(self, cell, level, is_terminal):
-        self.cell = cell
+    def __init__(self, row, level, is_terminal, edges):
+        self.row = row  # (id, face, i, j, size, orientation) of the cell
         self.level = level
         self.is_terminal = is_terminal
         self.children: List["_Candidate"] = []
+        self.edges = edges  # indices of the region edges that reach the cell
+
+    @property
+    def cell(self) -> int:
+        return self.row[0]
+
+
+def _classified(region, cells, pairs, level: int) -> List[Optional[_Candidate]]:
+    """One region call for a batch of cells at ``level``: a candidate
+    per cell that may intersect the region, None for the others, in
+    batch order."""
+    may, contains, (pair_cell, pair_edge) = region._classify(cells, *pairs)
+    order = np.argsort(pair_cell, kind="stable")
+    bounds = np.searchsorted(pair_cell[order], np.arange(len(cells) + 1)).tolist()
+    edges = pair_edge[order]
+    terminal = contains | (level == MAX_LEVEL)
+    rows = zip(cells.ids.tolist(), cells.face.tolist(), cells.i.tolist(),
+               cells.j.tolist(), cells.size.tolist(), cells.orient.tolist())
+    return [
+        _Candidate(row, level, bool(terminal[k]), edges[bounds[k]:bounds[k + 1]])
+        if may[k] else None
+        for k, row in enumerate(rows)
+    ]
 
 
 class RegionCoverer:
@@ -98,79 +111,68 @@ class RegionCoverer:
     def __init__(self, region, max_cells: int = 8):
         self.region = region
         self.max_cells = max_cells
-        self.result: List[np.uint64] = []
+        self.result: List[int] = []
         self.pq: List = []
         self._seq = 0
 
-    # -- region tests -----------------------------------------------------
-    def _may_intersect(self, cell) -> bool:
-        return bool(self.region.may_intersect_batch(np.array([cell], dtype=np.uint64))[0])
+    def _expand_children(self, parents: List[_Candidate]) -> None:
+        """Set the children of every parent from one batched region call;
+        each child tests only the edges that reach its parent."""
+        from .coverer import _Cells
 
-    def _contains(self, cell) -> bool:
-        return bool(self.region.contains_cell_batch(np.array([cell], dtype=np.uint64))[0])
+        cols = list(zip(*(p.row for p in parents)))
+        cells = _Cells(
+            np.array(cols[0], dtype=np.uint64), *(np.array(c, dtype=np.int64) for c in cols[1:])
+        ).children()
+        sizes = np.repeat([len(p.edges) for p in parents], 4)
+        pair_cell = np.repeat(np.arange(len(cells)), sizes)
+        pair_edge = np.concatenate([np.tile(p.edges, 4) for p in parents])
+        kids = _classified(self.region, cells, (pair_cell, pair_edge), parents[0].level + 1)
+        for n, p in enumerate(parents):
+            p.children = [k for k in kids[4 * n : 4 * n + 4] if k is not None]
 
-    # -- algorithm --------------------------------------------------------
-    def _new_candidate(self, cell) -> Optional[_Candidate]:
-        if not self._may_intersect(cell):
-            return None
-        lev = int(cm.level(np.array([cell], dtype=np.uint64))[0])
-        is_terminal = lev == MAX_LEVEL or self._contains(cell)
-        return _Candidate(U64(cell), lev, is_terminal)
-
-    def _expand_children(self, candidate: _Candidate) -> int:
-        """Probe all 4 children in single batched region calls."""
-        kids = cm.child(
-            np.repeat(np.array([candidate.cell], dtype=np.uint64), 4), np.arange(4)
-        )
-        may = self.region.may_intersect_batch(kids)
-        kids = kids[may]
-        if not len(kids):
-            return 0
-        child_level = candidate.level + 1
-        if child_level == MAX_LEVEL:
-            term = np.ones(len(kids), dtype=bool)
-        else:
-            term = self.region.contains_cell_batch(kids)
-        num_terminals = 0
-        for k, t in zip(kids, term):
-            candidate.children.append(_Candidate(U64(k), child_level, bool(t)))
-            if t:
-                num_terminals += 1
-        return num_terminals
-
-    def _add_candidate(self, candidate: Optional[_Candidate]):
-        if candidate is None:
-            return
-        if candidate.is_terminal:
-            self.result.append(candidate.cell)
-            return
-        num_terminals = self._expand_children(candidate)
-        lev = candidate.level
-        if not candidate.children:
-            return
-        if num_terminals == 4:
-            candidate.is_terminal = True
-            self._add_candidate(candidate)
-            return
-        shift = self.MAX_CHILDREN_SHIFT
-        # S2 maximizes -(((level<<2)+children<<2)+terminals); with a
-        # min-heap that is the non-negated key: shallow cells with few
-        # children pop first
-        priority = (((lev << shift) + len(candidate.children)) << shift) + num_terminals
-        self._seq += 1
-        heapq.heappush(self.pq, (priority, self._seq, candidate))
+    def _add_candidates(self, cands: List[_Candidate]) -> None:
+        """S2's AddCandidate for each candidate in order; the children of
+        all the non-terminal ones are classified first, together (the
+        tests are pure functions of the cell, so no decision changes)."""
+        todo = [c for c in cands if not c.is_terminal]
+        if todo:
+            self._expand_children(todo)
+        for candidate in cands:
+            if candidate.is_terminal:
+                self.result.append(candidate.cell)
+                continue
+            if not candidate.children:
+                continue
+            num_terminals = sum(c.is_terminal for c in candidate.children)
+            if num_terminals == 4:
+                candidate.is_terminal = True
+                self.result.append(candidate.cell)
+                continue
+            shift = self.MAX_CHILDREN_SHIFT
+            # S2 maximizes -(((level<<2)+children<<2)+terminals); with a
+            # min-heap that is the non-negated key: shallow cells with few
+            # children pop first
+            priority = (
+                ((candidate.level << shift) + len(candidate.children)) << shift
+            ) + num_terminals
+            self._seq += 1
+            heapq.heappush(self.pq, (priority, self._seq, candidate))
 
     def _initial_candidates(self):
+        from .coverer import _Cells
+
+        level = 0
         if self.max_cells >= 4:
             center, radius = self.region.cap_bound()
             level = min(min_width_level_for_value(2.0 * radius), MAX_LEVEL - 1)
-            if level > 0:
-                leaf = self._leaf_from_xyz(center)
-                for cell in dict.fromkeys(vertex_neighbors(leaf, level)):
-                    self._add_candidate(self._new_candidate(cell))
-                return
-        for f in range(6):
-            self._add_candidate(self._new_candidate(U64((f << 61) | (1 << 60))))
+        if level > 0:
+            cells = list(dict.fromkeys(vertex_neighbors(self._leaf_from_xyz(center), level)))
+        else:
+            cells = [U64((f << 61) | (1 << 60)) for f in range(6)]
+        cells = _Cells.of(np.array(cells, dtype=np.uint64))
+        cands = _classified(self.region, cells, self.region.all_edges(len(cells)), level)
+        self._add_candidates([c for c in cands if c is not None])
 
     @staticmethod
     def _leaf_from_xyz(p: np.ndarray) -> np.uint64:
@@ -193,8 +195,7 @@ class RegionCoverer:
                 len(candidate.children) == 1
                 or len(self.result) + len(self.pq) + len(candidate.children) <= self.max_cells
             ):
-                for child in candidate.children:
-                    self._add_candidate(child)
+                self._add_candidates(candidate.children)
             else:
                 candidate.is_terminal = True
                 self.result.append(candidate.cell)
