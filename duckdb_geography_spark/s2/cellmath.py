@@ -159,7 +159,7 @@ _FACE_SIGNS = np.array(
 )
 
 
-def face_uv_to_xyz3(face, u, v) -> np.ndarray:
+def face_uv_to_xyz(face, u, v) -> np.ndarray:
     """(face, u, v) -> (..., 3) un-normalized direction vectors; all
     zeros for a face outside 0..5."""
     face, u, v = np.broadcast_arrays(
@@ -175,12 +175,6 @@ def face_uv_to_xyz3(face, u, v) -> np.ndarray:
     if not ok.all():
         out[~ok] = 0.0
     return out
-
-
-def face_uv_to_xyz(face, u, v):
-    """(face, u, v) -> un-normalized direction vector (3 arrays)."""
-    out = face_uv_to_xyz3(face, u, v)
-    return out[..., 0], out[..., 1], out[..., 2]
 
 
 def uv_to_st(u):
@@ -370,7 +364,7 @@ def cellid_to_lonlat(ids_u):
     face, si, ti = cellid_to_center_st(ids)
     s = si.astype(np.float64) / (2.0 * MAX_SIZE)
     t = ti.astype(np.float64) / (2.0 * MAX_SIZE)
-    x, y, z = face_uv_to_xyz(face.astype(np.int64), st_to_uv(s), st_to_uv(t))
+    x, y, z = np.moveaxis(face_uv_to_xyz(face.astype(np.int64), st_to_uv(s), st_to_uv(t)), -1, 0)
     n = np.sqrt(x * x + y * y + z * z)
     lon, lat = xyz_to_lonlat(x / n, y / n, z / n)
     bad = ~is_valid(ids)
@@ -383,46 +377,96 @@ def cellid_to_center_xyz(ids_u):
     face, si, ti = cellid_to_center_st(ids)
     s = si.astype(np.float64) / (2.0 * MAX_SIZE)
     t = ti.astype(np.float64) / (2.0 * MAX_SIZE)
-    x, y, z = face_uv_to_xyz(face.astype(np.int64), st_to_uv(s), st_to_uv(t))
+    x, y, z = np.moveaxis(face_uv_to_xyz(face.astype(np.int64), st_to_uv(s), st_to_uv(t)), -1, 0)
     n = np.sqrt(x * x + y * y + z * z)
     return x / n, y / n, z / n
 
 
+#: per-cell Hilbert tables as int64, for Cells.children
+_POS_TO_IJ = POS_TO_IJ.astype(np.int64)
+_POS_TO_ORIENT = POS_TO_ORIENT.astype(np.int64)
+#: cell corners sit on the leaf grid lines 0..MAX_SIZE
+_GRID = MAX_SIZE + 1
+
 # ---------------------------------------------------------------------------
-# cell geometry: uv bounds, vertices, neighbors
+# cell geometry: ij squares, vertices, neighbors
 # ---------------------------------------------------------------------------
 
 
-def cell_ij_bounds(ids_u):
-    """(face, i_lo, j_lo, size) of the cell's ij square at leaf scale."""
-    ids = np.asarray(ids_u, dtype=np.uint64)
-    face, i, j, _ = to_face_ij_orientation(ids)
-    lev = level(ids)
-    size = (_1 << (U64(MAX_LEVEL) - np.clip(lev, 0, 30).astype(np.uint64)))
-    i_lo = i & ~(size - _1)
-    j_lo = j & ~(size - _1)
-    return face, i_lo, j_lo, size
+class Cells:
+    """A batch of cells with their leaf-scale (i, j) squares and Hilbert
+    orientations, so children come from the parent's square by table
+    lookup instead of a fresh id decode."""
 
+    __slots__ = ("ids", "face", "i", "j", "size", "orient")
 
-def ij_to_st_min(ij):
-    """Lower bound of an ij coordinate in st space (ij / 2^30)."""
-    return np.asarray(ij, dtype=np.float64) / MAX_SIZE
+    def __init__(self, ids, face, i, j, size, orient):
+        self.ids, self.face, self.i, self.j = ids, face, i, j
+        self.size, self.orient = size, orient
+
+    @classmethod
+    def of(cls, ids) -> "Cells":
+        ids = np.asarray(ids, dtype=np.uint64)
+        face, i, j, orient = to_face_ij_orientation(ids)
+        lev = np.clip(level(ids), 0, MAX_LEVEL)
+        size = np.int64(1) << (MAX_LEVEL - lev)
+        # the decode walks a non-leaf id's trailing "10 00 .." digits too,
+        # and each "00" swaps the orientation: undo an odd count of them
+        # (S2CellId::ToFaceIJOrientation's lsb mask)
+        orient = orient.astype(np.int64) ^ (((MAX_LEVEL - lev) % 2 == 0) & (lev < MAX_LEVEL))
+        lo = ~(size - 1)
+        return cls(ids, face.astype(np.int64), i.astype(np.int64) & lo,
+                   j.astype(np.int64) & lo, size, orient)
+
+    def __len__(self) -> int:
+        return len(self.ids)
+
+    def take(self, idx) -> "Cells":
+        return Cells(*(getattr(self, f)[idx] for f in self.__slots__))
+
+    def children(self) -> "Cells":
+        """The 4 children of every cell, in child-position order, (4n,)."""
+        k = np.arange(4)
+        ij = _POS_TO_IJ[self.orient[:, None], k]
+        half = (self.size >> 1)[:, None]
+        low = lsb(self.ids)[:, None]
+        step = low >> _2
+        ids = self.ids[:, None] - low + step + (step << _1) * k.astype(np.uint64)
+        return Cells(
+            ids.ravel(),
+            np.repeat(self.face, 4),
+            (self.i[:, None] + (ij >> 1) * half).ravel(),
+            (self.j[:, None] + (ij & 1) * half).ravel(),
+            np.repeat(half.ravel(), 4),
+            (self.orient[:, None] ^ _POS_TO_ORIENT[k]).ravel(),
+        )
+
+    def corner_keys(self) -> np.ndarray:
+        """(n,4) int64 (face, i, j) key of each corner, CCW from (lo, lo)."""
+        i0, j0 = self.i[:, None], self.j[:, None]
+        s = self.size[:, None]
+        ci = np.concatenate([i0, i0 + s, i0 + s, i0], axis=1)
+        cj = np.concatenate([j0, j0, j0 + s, j0 + s], axis=1)
+        return (self.face[:, None] * _GRID + ci) * _GRID + cj
+
+    def corners(self) -> np.ndarray:
+        """(n,4,3) unit-vector corners, CCW from (u_lo, v_lo)."""
+        n = len(self.ids)
+        lo_hi = np.stack([self.i, self.i + self.size, self.j, self.j + self.size])
+        u_lo, u_hi, v_lo, v_hi = st_to_uv(lo_hi / MAX_SIZE)
+        us = np.stack([u_lo, u_hi, u_hi, u_lo], axis=1)
+        vs = np.stack([v_lo, v_lo, v_hi, v_hi], axis=1)
+        xyz = face_uv_to_xyz(np.repeat(self.face, 4), us.ravel(), vs.ravel())
+        xyz /= np.linalg.norm(xyz, axis=1)[:, None]
+        return xyz.reshape(n, 4, 3)
 
 
 def cell_vertex_lonlat(ids_u, k):
     """k-th vertex (CCW from (u_lo, v_lo)) of the cell polygon -> lon/lat."""
-    ids = np.asarray(ids_u, dtype=np.uint64)
-    k = np.asarray(k, dtype=np.int64) & 3
-    face, i_lo, j_lo, size = cell_ij_bounds(ids)
-    u_lo = st_to_uv(ij_to_st_min(i_lo))
-    u_hi = st_to_uv(ij_to_st_min(i_lo + size))
-    v_lo = st_to_uv(ij_to_st_min(j_lo))
-    v_hi = st_to_uv(ij_to_st_min(j_lo + size))
-    u = np.where((k == 0) | (k == 3), u_lo, u_hi)
-    v = np.where(k < 2, v_lo, v_hi)
-    x, y, z = face_uv_to_xyz(face.astype(np.int64), u, v)
-    n = np.sqrt(x * x + y * y + z * z)
-    return xyz_to_lonlat(x / n, y / n, z / n)
+    ids, k = np.broadcast_arrays(np.asarray(ids_u, dtype=np.uint64), np.asarray(k, dtype=np.int64))
+    xyz = Cells.of(ids.ravel()).corners()[np.arange(ids.size), k.ravel() & 3]
+    lon, lat = xyz_to_lonlat(xyz[:, 0], xyz[:, 1], xyz[:, 2])
+    return lon.reshape(ids.shape), lat.reshape(ids.shape)
 
 
 def edge_neighbors(ids_u):
@@ -468,7 +512,7 @@ def _from_face_ij_wrap(face, i, j) -> np.ndarray:
     kScaleLimit = kLimit * scale  # unused; kept for parity with the S2 notes
     u = np.maximum(-kLimit, np.minimum(kLimit, scale * (2 * (i - MAX_SIZE // 2) + 1)))
     v = np.maximum(-kLimit, np.minimum(kLimit, scale * (2 * (j - MAX_SIZE // 2) + 1)))
-    x, y, z = face_uv_to_xyz(face, u, v)
+    x, y, z = np.moveaxis(face_uv_to_xyz(face, u, v), -1, 0)
     nf, nu, nv = xyz_to_face_uv(x, y, z)
     ni = np.clip(np.floor(0.5 * (nu + 1.0) * MAX_SIZE), 0, MAX_SIZE - 1).astype(np.uint64)
     nj = np.clip(np.floor(0.5 * (nv + 1.0) * MAX_SIZE), 0, MAX_SIZE - 1).astype(np.uint64)

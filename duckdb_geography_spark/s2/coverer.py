@@ -12,22 +12,15 @@ reference's golden cell lists exactly (Fiji,
 test/sql/geography/bounds.test:8-16). Fixed-level coverings use a
 batched BFS descent.
 
-Both coverers share one kernel, ``_GeogRegion._classify``, which
-decides may-intersect and contains for a whole batch of cells (a
-coverer generation, or a BFS level) in one pass:
-
-- children are derived from their parent's leaf-scale (i, j) square
-  and Hilbert orientation, not decoded from their ids;
-- region vertices are found in a cell by a ``searchsorted`` range on
-  the sorted vertex cells;
-- a cell corner's inside-ness is memoised per (face, i, j), so
-  siblings and parents share it within one covering;
-- each cell tests only the edges that reach it: those kept for its
-  parent, then screened against the cell's bounding cap with a slack
-  far above the arithmetic's rounding. The crossing value of every
-  remaining (cell edge, region edge) pair comes from the same
-  elementwise ``segments_cross``, so no decision depends on the batch
-  a cell is tested in.
+Both share one kernel, ``_GeogRegion._classify``: may-intersect and
+contains for a whole batch of cells (a coverer generation, a BFS level)
+in one pass. Children come from their parent's (i, j) square
+(``cellmath.Cells``); region vertices are found by ``searchsorted``;
+corner inside-ness is memoised per (face, i, j) within a covering; and
+each cell tests only the edges that reach its bounding cap, from those
+kept for its parent, with a slack far above the rounding. Every
+remaining (cell edge, region edge) pair is decided by the elementwise
+``segments_cross``, so no decision depends on the batch.
 """
 
 from __future__ import annotations
@@ -44,10 +37,6 @@ from . import cellmath as cm
 U64 = np.uint64
 _FACE_CELLS = [U64((f << 61) | (1 << 60)) for f in range(6)]
 _FACE_LSB = 1 << 60
-_POS_TO_IJ = cm.POS_TO_IJ.astype(np.int64)
-_POS_TO_ORIENT = cm.POS_TO_ORIENT.astype(np.int64)
-#: cell corners sit on the leaf grid lines 0..MAX_SIZE
-_GRID = cm.MAX_SIZE + 1
 #: slack (radians) of the edge-reaches-cell screen: far above the
 #: rounding of the cap arithmetic and segments_cross's 1e-15 touch
 #: tolerance, so no edge that could test as crossing is screened out
@@ -88,78 +77,9 @@ def normalize_cell_union(cells) -> np.ndarray:
     return np.array(out, dtype=np.uint64)
 
 
-class _Cells:
-    """A batch of cells with their leaf-scale (i, j) squares and Hilbert
-    orientations, so children come from the parent's square by table
-    lookup instead of a fresh id decode."""
-
-    __slots__ = ("ids", "face", "i", "j", "size", "orient")
-
-    def __init__(self, ids, face, i, j, size, orient):
-        self.ids, self.face, self.i, self.j = ids, face, i, j
-        self.size, self.orient = size, orient
-
-    @classmethod
-    def of(cls, ids) -> "_Cells":
-        ids = np.asarray(ids, dtype=np.uint64)
-        face, i, j, orient = cm.to_face_ij_orientation(ids)
-        lev = cm.level(ids)
-        size = np.int64(1) << (cm.MAX_LEVEL - lev)
-        # the decode walks a non-leaf id's trailing "10 00 .." digits too,
-        # and each "00" swaps the orientation: undo an odd count of them
-        # (S2CellId::ToFaceIJOrientation's lsb mask)
-        orient = orient.astype(np.int64) ^ (((cm.MAX_LEVEL - lev) % 2 == 0) & (lev < cm.MAX_LEVEL))
-        lo = ~(size - 1)
-        return cls(ids, face.astype(np.int64), i.astype(np.int64) & lo,
-                   j.astype(np.int64) & lo, size, orient)
-
-    def __len__(self) -> int:
-        return len(self.ids)
-
-    def take(self, idx) -> "_Cells":
-        return _Cells(self.ids[idx], self.face[idx], self.i[idx], self.j[idx],
-                      self.size[idx], self.orient[idx])
-
-    def children(self) -> "_Cells":
-        """The 4 children of every cell, in child-position order, (4n,)."""
-        k = np.arange(4)
-        ij = _POS_TO_IJ[self.orient[:, None], k]
-        half = (self.size >> 1)[:, None]
-        lsb = cm.lsb(self.ids)[:, None]
-        step = lsb >> U64(2)
-        ids = self.ids[:, None] - lsb + step + (step << U64(1)) * k.astype(np.uint64)
-        return _Cells(
-            ids.ravel(),
-            np.repeat(self.face, 4),
-            (self.i[:, None] + (ij >> 1) * half).ravel(),
-            (self.j[:, None] + (ij & 1) * half).ravel(),
-            np.repeat(half.ravel(), 4),
-            (self.orient[:, None] ^ _POS_TO_ORIENT[k]).ravel(),
-        )
-
-    def corner_keys(self) -> np.ndarray:
-        """(n,4) int64 (face, i, j) key of each corner, CCW from (lo, lo)."""
-        i0, j0 = self.i[:, None], self.j[:, None]
-        s = self.size[:, None]
-        ci = np.concatenate([i0, i0 + s, i0 + s, i0], axis=1)
-        cj = np.concatenate([j0, j0, j0 + s, j0 + s], axis=1)
-        return (self.face[:, None] * _GRID + ci) * _GRID + cj
-
-    def corners(self) -> np.ndarray:
-        """(n,4,3) unit-vector corners, CCW from (u_lo, v_lo)."""
-        n = len(self.ids)
-        lo_hi = np.stack([self.i, self.i + self.size, self.j, self.j + self.size])
-        u_lo, u_hi, v_lo, v_hi = cm.st_to_uv(lo_hi / cm.MAX_SIZE)
-        us = np.stack([u_lo, u_hi, u_hi, u_lo], axis=1)
-        vs = np.stack([v_lo, v_lo, v_hi, v_hi], axis=1)
-        xyz = cm.face_uv_to_xyz3(np.repeat(self.face, 4), us.ravel(), vs.ravel())
-        xyz /= np.linalg.norm(xyz, axis=1)[:, None]
-        return xyz.reshape(n, 4, 3)
-
-
 def cells_corners(cells: np.ndarray) -> np.ndarray:
     """(n,4,3) unit-vector corners for n cells, one batched pass."""
-    return _Cells.of(cells).corners()
+    return cm.Cells.of(cells).corners()
 
 
 class _GeogRegion:
@@ -175,14 +95,14 @@ class _GeogRegion:
         pts = geog.all_points()
         self.vertex_lonlat = [pts] if len(pts) else []
         edges_a, edges_b = [], []
-        self.rings_xyz = []  # shell rings for containment tests
-        self.ring_orients = []  # +-1 per shell (winding vs antipode)
         for line in geog.all_lines():
             self.vertex_lonlat.append(line)
             if len(line) >= 2:
                 xyz = gd.lonlat_deg_to_xyz(line)
                 edges_a.append(xyz[:-1])
                 edges_b.append(xyz[1:])
+        self.rings_xyz = []  # shell rings for containment tests
+        self.ring_orients = []  # +-1 per shell (winding vs antipode)
         self.shell_holes = []  # per shell: [(hole_xyz, orient), ...]
         for rings in geog.all_polygons():
             # Track whether THIS polygon's shell was kept: if a degenerate
@@ -203,19 +123,22 @@ class _GeogRegion:
                     shell_kept = True
                 elif shell_kept:
                     self.shell_holes[-1].append((xyz, gd.ring_orientation(xyz)))
-        # every shell and hole in one array, with the span of each and
-        # the index of each vertex's successor in its ring
-        flat, nxt, self._ring_spans, at = [], [], [], 0
+        # every shell and hole in one array; per shell ((start, end),
+        # orientation, [((start, end), orientation) per hole]), and each
+        # vertex's successor in its ring
+        flat, self._ring_spans, at = [], [], 0
         for shell, orient, holes in zip(self.rings_xyz, self.ring_orients, self.shell_holes):
-            group = []
+            spans = []
             for r, o in [(shell, orient)] + holes:
                 flat.append(r)
-                nxt.append(np.roll(np.arange(at, at + len(r)), -1))
-                group.append(((at, at + len(r)), o))
+                spans.append(((at, at + len(r)), o))
                 at += len(r)
-            self._ring_spans.append((group[0][0], group[0][1], group[1:]))
+            self._ring_spans.append((*spans[0], spans[1:]))
         self._ring_all = np.concatenate(flat) if flat else np.empty((0, 3))
-        self._ring_next = np.concatenate(nxt) if nxt else np.empty(0, dtype=np.int64)
+        self._ring_next = np.arange(1, at + 1)
+        for shell, _, holes in self._ring_spans:
+            for (start, end), _ in [(shell, 0)] + holes:
+                self._ring_next[end - 1] = start
         self.edge_a = np.concatenate(edges_a) if edges_a else np.empty((0, 3))
         self.edge_b = np.concatenate(edges_b) if edges_b else np.empty((0, 3))
         self.edge_n = gd.cross3(self.edge_a, self.edge_b)
@@ -298,7 +221,7 @@ class _GeogRegion:
         e = len(self.edge_a)
         return np.repeat(np.arange(n), e), np.tile(np.arange(e), n)
 
-    def _classify(self, cells: _Cells, pair_cell, pair_edge, want_contains=True):
+    def _classify(self, cells: cm.Cells, pair_cell, pair_edge, want_contains=True):
         """(may_intersect, contains, kept pairs) for a batch of cells.
 
         ``(pair_cell, pair_edge)`` name, for each cell, a superset of the
@@ -353,7 +276,7 @@ class _GeogRegion:
 
     def _classify_ids(self, cells: np.ndarray):
         cells = np.asarray(cells, dtype=np.uint64)
-        return self._classify(_Cells.of(cells), *self.all_edges(len(cells)))
+        return self._classify(cm.Cells.of(cells), *self.all_edges(len(cells)))
 
     def may_intersect_batch(self, cells: np.ndarray) -> np.ndarray:
         return self._classify_ids(cells)[0]
@@ -490,9 +413,6 @@ def cap_coverings_fixed_level(
             trav[rest[dmin <= buffer_radians + circum + slack]] = True
         return acc, trav
 
-    def _accept(cand_cells: np.ndarray, cand_rows: np.ndarray) -> np.ndarray:
-        return _accept_both(cand_cells, cand_rows)[0]
-
     seed = cm.parent(vcell, np.full(n, level, dtype=np.int64))
     accepted: list = [[int(seed[i])] for i in range(n)]  # seed contains the point
     seen = {(i, int(seed[i])) for i in range(n)}
@@ -540,7 +460,7 @@ def cap_coverings_fixed_level(
         if not len(idx):
             break
         anc = cm.parent(all_cells[idx], np.full(len(idx), lev, dtype=np.int64))
-        keep[idx[~_accept(anc, all_rows[idx])]] = False
+        keep[idx[~_accept_both(anc, all_rows[idx])[0]]] = False
     out: list = [[] for _ in range(n)]
     for r, c in zip(all_rows[keep].tolist(), all_cells[keep].tolist()):
         out[r].append(c)
@@ -624,7 +544,7 @@ class CoveringOverflowError(ValueError):
         )
 
 
-def _keep(cells: _Cells, mask, pairs):
+def _keep(cells: cm.Cells, mask, pairs):
     """The cells under ``mask`` and their (cell, edge) pairs, renumbered."""
     pair_cell, pair_edge = pairs
     sel = mask[pair_cell]
@@ -642,7 +562,7 @@ def _fixed_level_covering(region: _GeogRegion, level: int, cap: int = 16384) -> 
     ``_classify`` call per level. All cells in the result are exactly at
     ``level`` (the equi-join key contract). Raises CoveringOverflowError
     if the covering cannot fit in ``cap`` cells at that level."""
-    cells = _Cells.of(np.array(_FACE_CELLS, dtype=np.uint64))
+    cells = cm.Cells.of(np.array(_FACE_CELLS, dtype=np.uint64))
     may, _, pairs = region._classify(cells, *region.all_edges(len(cells)), want_contains=False)
     cells, pairs = _keep(cells, may, pairs)
     suggested = 0

@@ -118,10 +118,8 @@ class RegionCoverer:
     def _expand_children(self, parents: List[_Candidate]) -> None:
         """Set the children of every parent from one batched region call;
         each child tests only the edges that reach its parent."""
-        from .coverer import _Cells
-
         cols = list(zip(*(p.row for p in parents)))
-        cells = _Cells(
+        cells = cm.Cells(
             np.array(cols[0], dtype=np.uint64), *(np.array(c, dtype=np.int64) for c in cols[1:])
         ).children()
         sizes = np.repeat([len(p.edges) for p in parents], 4)
@@ -160,8 +158,6 @@ class RegionCoverer:
             heapq.heappush(self.pq, (priority, self._seq, candidate))
 
     def _initial_candidates(self):
-        from .coverer import _Cells
-
         level = 0
         if self.max_cells >= 4:
             center, radius = self.region.cap_bound()
@@ -170,7 +166,7 @@ class RegionCoverer:
             cells = list(dict.fromkeys(vertex_neighbors(self._leaf_from_xyz(center), level)))
         else:
             cells = [U64((f << 61) | (1 << 60)) for f in range(6)]
-        cells = _Cells.of(np.array(cells, dtype=np.uint64))
+        cells = cm.Cells.of(np.array(cells, dtype=np.uint64))
         cands = _classified(self.region, cells, self.region.all_edges(len(cells)), level)
         self._add_candidates([c for c in cands if c is not None])
 

@@ -71,7 +71,7 @@ def sample_cells(region, seed):
         cells = np.unique(cm.parent(leaves, np.full(len(leaves), lev - 1)))
         parents.append(rng.choice(cells, min(PER_LEVEL, len(cells)), replace=False))
     parents = np.concatenate(parents).astype(np.uint64)
-    kids = coverer._Cells.of(parents).children().ids
+    kids = cm.Cells.of(parents).children().ids
     return parents, kids
 
 
@@ -118,7 +118,7 @@ def test_cell_decisions_do_not_depend_on_the_batch(name):
     assert np.array_equal(contains, want_contains[perm])
 
     # the coverer's path: children test only the edges kept for their parent
-    cells = coverer._Cells.of(parents)
+    cells = cm.Cells.of(parents)
     _, _, kept = fresh(region)._classify(cells, *region.all_edges(len(parents)))
     may, contains, _ = region._classify(cells.children(), *coverer._child_pairs(kept))
     assert np.array_equal(may, want_may)
@@ -155,9 +155,9 @@ def test_children_frames_match_decoded_ids():
     rng = np.random.default_rng(11)
     leaves = cm.lonlat_to_cellid(rng.uniform(-180, 180, 400), rng.uniform(-90, 90, 400))
     for lev in range(0, 30):
-        cells = coverer._Cells.of(cm.parent(leaves, np.full(len(leaves), lev)))
+        cells = cm.Cells.of(cm.parent(leaves, np.full(len(leaves), lev)))
         kids = cells.children()
-        ref = coverer._Cells.of(kids.ids)
+        ref = cm.Cells.of(kids.ids)
         assert np.array_equal(kids.ids, cm.child(np.repeat(cells.ids, 4), np.tile(np.arange(4), len(cells))))
         for f in ("face", "i", "j", "size", "orient"):
             assert np.array_equal(getattr(kids, f), getattr(ref, f)), (lev, f)
