@@ -26,9 +26,21 @@ def lonlat_deg_to_xyz(coords: np.ndarray) -> np.ndarray:
     return np.stack([cos_lat * np.cos(lon), cos_lat * np.sin(lon), np.sin(lat)], axis=1)
 
 
+def columns(pts: np.ndarray) -> np.ndarray:
+    """(3,n) contiguous copy of the x, y and z columns of (n,3) ``pts``.
+
+    numpy's SIMD ``arctan2`` (and its other SVML ufuncs) runs only when
+    no operand's memory span overlaps the output's, and a strided
+    column's span runs past its array's end: fed a column view, the
+    ufunc takes the SIMD or the libm path (which can differ in the last
+    bit) by where the allocator put the output. Contiguous columns
+    always take the SIMD path."""
+    return np.ascontiguousarray(np.asarray(pts, dtype=np.float64).reshape(-1, 3).T)
+
+
 def xyz_to_lonlat_deg(pts: np.ndarray) -> np.ndarray:
     """(n,3) unit vectors -> (n,2) lon/lat degrees (snapped values)."""
-    x, y, z = pts[:, 0], pts[:, 1], pts[:, 2]
+    x, y, z = columns(pts)
     lon = np.degrees(np.arctan2(y, x))
     lat = np.degrees(np.arctan2(z, np.sqrt(x * x + y * y)))
     return np.stack([lon, lat], axis=1)

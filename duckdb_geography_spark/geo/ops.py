@@ -874,7 +874,8 @@ def bounds_rect(g: Geography) -> Tuple[float, float, float, float]:
     # differ in the last bit: np.arctan2 for every vertex (here), and
     # math.atan2 for every edge endpoint and for each edge apex that
     # lies on its arc (below, and in _edge_lat_extremes_rad).
-    lat_r = np.arctan2(verts[:, 2], np.sqrt(verts[:, 0] ** 2 + verts[:, 1] ** 2))
+    x, y, z = gd.columns(verts)
+    lat_r = np.arctan2(z, np.sqrt(x**2 + y**2))
     lat_lo_r, lat_hi_r = float(np.min(lat_r)), float(np.max(lat_r))
     # longitude interval: union of per-EDGE spans (S2 RectBounder's
     # FromPointPair semantics) — adding vertices one at a time extends
@@ -882,7 +883,8 @@ def bounds_rect(g: Geography) -> Tuple[float, float, float, float]:
     # exclude the interior of an edge that runs the other way round
     lng_int = None
     if len(parts.points):
-        plngs = np.degrees(np.arctan2(parts.points[:, 1], parts.points[:, 0]))
+        x, y, _ = gd.columns(parts.points)
+        plngs = np.degrees(np.arctan2(y, x))
         for p in plngs:
             span = _LngInterval.from_point(float(p))
             lng_int = span if lng_int is None else lng_int.union(span)

@@ -465,7 +465,8 @@ def cell_vertex_lonlat(ids_u, k):
     """k-th vertex (CCW from (u_lo, v_lo)) of the cell polygon -> lon/lat."""
     ids, k = np.broadcast_arrays(np.asarray(ids_u, dtype=np.uint64), np.asarray(k, dtype=np.int64))
     xyz = Cells.of(ids.ravel()).corners()[np.arange(ids.size), k.ravel() & 3]
-    lon, lat = xyz_to_lonlat(xyz[:, 0], xyz[:, 1], xyz[:, 2])
+    # contiguous columns: see geo.geodesy.columns
+    lon, lat = xyz_to_lonlat(*np.ascontiguousarray(xyz.T))
     return lon.reshape(ids.shape), lat.reshape(ids.shape)
 
 

@@ -77,11 +77,6 @@ def normalize_cell_union(cells) -> np.ndarray:
     return np.array(out, dtype=np.uint64)
 
 
-def cells_corners(cells: np.ndarray) -> np.ndarray:
-    """(n,4,3) unit-vector corners for n cells, one batched pass."""
-    return cm.Cells.of(cells).corners()
-
-
 class _GeogRegion:
     """May-intersect and contains oracle for (cell, geography), with no
     false negatives for may-intersect. Every test runs batched over
@@ -406,7 +401,7 @@ def cap_coverings_fixed_level(
             cx, cy, cz = cm.cellid_to_center_xyz(cells_r)
             centers = np.stack([cx, cy, cz], axis=1)
             circum = np.max(
-                gd.angle(centers[:, None, :], cells_corners(cells_r)), axis=1
+                gd.angle(centers[:, None, :], cm.Cells.of(cells_r).corners()), axis=1
             )
             dmin = gd.angle(centers, vxyz[cand_rows[rest]])
             acc[rest[dmin <= buffer_radians + circum]] = True

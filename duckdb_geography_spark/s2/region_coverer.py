@@ -88,10 +88,9 @@ def _classified(region, cells, pairs, level: int) -> List[Optional[_Candidate]]:
     """One region call for a batch of cells at ``level``: a candidate
     per cell that may intersect the region, None for the others, in
     batch order."""
-    may, contains, (pair_cell, pair_edge) = region._classify(cells, *pairs)
-    order = np.argsort(pair_cell, kind="stable")
-    bounds = np.searchsorted(pair_cell[order], np.arange(len(cells) + 1)).tolist()
-    edges = pair_edge[order]
+    may, contains, (pair_cell, edges) = region._classify(cells, *pairs)
+    # pairs come, and are kept, grouped by cell in batch order
+    bounds = np.searchsorted(pair_cell, np.arange(len(cells) + 1)).tolist()
     terminal = contains | (level == MAX_LEVEL)
     rows = zip(cells.ids.tolist(), cells.face.tolist(), cells.i.tolist(),
                cells.j.tolist(), cells.size.tolist(), cells.orient.tolist())

@@ -38,9 +38,8 @@ def main():
         else:
             args.append(a)
         i += 1
-    spark = get_spark(cpus=8)
+    spark = get_spark(cpus=len(os.sched_getaffinity(0)))
     spark.sparkContext.setLogLevel("ERROR")
-    import os
 
     con = duckdb.connect()
     for t in TABLES:

@@ -38,7 +38,7 @@ def norm_frame(df: pd.DataFrame) -> pd.DataFrame:
 def main(sf_dir: str, only=None) -> int:
     from duckdb_geography_spark.session import get_spark
 
-    spark = get_spark(cpus=8)
+    spark = get_spark(cpus=len(os.sched_getaffinity(0)))
     spark.sparkContext.setLogLevel("ERROR")
     con = duckdb.connect()
     for t in e.TABLES:

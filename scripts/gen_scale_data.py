@@ -76,7 +76,7 @@ def main():
 
     from duckdb_geography_spark.session import get_spark
 
-    spark = get_spark(cpus=os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    spark = get_spark(cpus=os.environ.get("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0)))))
     spark.sparkContext.setLogLevel("ERROR")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     os.makedirs(DST, exist_ok=True)

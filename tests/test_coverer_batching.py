@@ -31,7 +31,7 @@ def _country(name):
 
 
 def _cell_ring(cell, reverse=False):
-    lon, lat = cm.xyz_to_lonlat(*coverer.cells_corners(np.array([cell]))[0].T)
+    lon, lat = cm.xyz_to_lonlat(*np.ascontiguousarray(cm.Cells.of(np.array([cell])).corners()[0].T))
     pts = list(zip(lon.tolist(), lat.tolist()))
     pts = pts[::-1] if reverse else pts
     return "(" + ", ".join(f"{x!r} {y!r}" for x, y in pts + pts[:1]) + ")"
@@ -82,7 +82,7 @@ def brute_force(region, cells):
     vc = region.vertex_cells
     lo, hi = cm.range_min(cells)[:, None], cm.range_max(cells)[:, None]
     vin = np.any((lo <= vc[None, :]) & (vc[None, :] <= hi), axis=1)
-    corners = coverer.cells_corners(cells)
+    corners = cm.Cells.of(cells).corners()
     inside = np.array([[region._points_in_region(c[k : k + 1])[0] for k in range(4)] for c in corners])
     c0, c1 = corners[:, :, None, :], np.roll(corners, -1, axis=1)[:, :, None, :]
     cross = gd.segments_cross(c0, c1, region.edge_a[None, None], region.edge_b[None, None])
@@ -135,7 +135,7 @@ def test_winding_does_not_depend_on_the_batch(name):
     _, kids = sample_cells(region, seed=sorted(REGIONS).index(name))
     mids = region.edge_a + region.edge_b
     pts = np.concatenate([mids / np.linalg.norm(mids, axis=1)[:, None],
-                          coverer.cells_corners(kids).reshape(-1, 3)])
+                          cm.Cells.of(kids).corners().reshape(-1, 3)])
     want = np.array([region._points_in_region(p[None])[0] for p in pts])
     assert np.array_equal(region._points_in_region(pts), want)
     perm = np.random.default_rng(3).permutation(len(pts))
@@ -145,7 +145,7 @@ def test_winding_does_not_depend_on_the_batch(name):
 def test_sample_has_corners_within_rounding_of_an_edge():
     region = coverer._GeogRegion(on_grid_polygon())
     _, kids = sample_cells(region, seed=0)
-    corners = coverer.cells_corners(kids).reshape(-1, 1, 3)
+    corners = cm.Cells.of(kids).corners().reshape(-1, 1, 3)
     d = gd.point_segment_distance(corners, region.edge_a[None], region.edge_b[None]).min(axis=1)
     on_edge = (d < NEAR) & (gd.angle(corners[:, 0, None], region.vertex_xyz[None]).min(axis=1) > NEAR)
     assert on_edge.sum() >= 20
