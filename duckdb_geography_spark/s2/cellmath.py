@@ -510,7 +510,6 @@ def _from_face_ij_wrap(face, i, j) -> np.ndarray:
     # xyz, then re-derive face/uv.
     kLimit = 1.0 + 2.220446049250313e-16  # 1 + DBL_EPSILON
     scale = 1.0 / MAX_SIZE
-    kScaleLimit = kLimit * scale  # unused; kept for parity with the S2 notes
     u = np.maximum(-kLimit, np.minimum(kLimit, scale * (2 * (i - MAX_SIZE // 2) + 1)))
     v = np.maximum(-kLimit, np.minimum(kLimit, scale * (2 * (j - MAX_SIZE // 2) + 1)))
     x, y, z = np.moveaxis(face_uv_to_xyz(face, u, v), -1, 0)

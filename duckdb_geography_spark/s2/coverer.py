@@ -121,19 +121,17 @@ class _GeogRegion:
         # every shell and hole in one array; per shell ((start, end),
         # orientation, [((start, end), orientation) per hole]), and each
         # vertex's successor in its ring
-        flat, self._ring_spans, at = [], [], 0
+        flat, nxt, self._ring_spans, at = [], [], [], 0
         for shell, orient, holes in zip(self.rings_xyz, self.ring_orients, self.shell_holes):
             spans = []
             for r, o in [(shell, orient)] + holes:
                 flat.append(r)
+                nxt.append(np.roll(np.arange(at, at + len(r)), -1))
                 spans.append(((at, at + len(r)), o))
                 at += len(r)
             self._ring_spans.append((*spans[0], spans[1:]))
         self._ring_all = np.concatenate(flat) if flat else np.empty((0, 3))
-        self._ring_next = np.arange(1, at + 1)
-        for shell, _, holes in self._ring_spans:
-            for (start, end), _ in [(shell, 0)] + holes:
-                self._ring_next[end - 1] = start
+        self._ring_next = np.concatenate(nxt) if nxt else np.empty(0, dtype=np.int64)
         self.edge_a = np.concatenate(edges_a) if edges_a else np.empty((0, 3))
         self.edge_b = np.concatenate(edges_b) if edges_b else np.empty((0, 3))
         self.edge_n = gd.cross3(self.edge_a, self.edge_b)
@@ -576,8 +574,6 @@ def _fixed_level_covering(region: _GeogRegion, level: int, cap: int = 16384) -> 
 def _rect_cap_bound(rect):
     """(xmin, ymin, xmax, ymax) degrees -> (center_xyz, radius_rad),
     following S2LatLngRect::GetCapBound."""
-    import math
-
     xmin, ymin, xmax, ymax = rect
     if ymin > ymax:  # empty
         return np.array([1.0, 0.0, 0.0]), 0.0
