@@ -172,15 +172,16 @@ class _Parts:
                     return True
         return False
 
-    def edges(self) -> List[Tuple[np.ndarray, np.ndarray]]:
-        out = []
-        for l in self.lines:
-            if len(l) >= 2:
-                out.append((l[:-1], l[1:]))
+    def chains(self) -> List[np.ndarray]:
+        """The vertices of each line (2+ vertices) and of each ring closed
+        by its first vertex: edge k of a chain runs from vertex k to k+1."""
+        out = [l for l in self.lines if len(l) >= 2]
         for rings in self.polygons:
-            for r in rings:
-                out.append((r, np.roll(r, -1, axis=0)))
+            out += [np.concatenate([r, r[:1]]) for r in rings]
         return out
+
+    def edges(self) -> List[Tuple[np.ndarray, np.ndarray]]:
+        return [(c[:-1], c[1:]) for c in self.chains()]
 
     def edge_arrays(self) -> Optional[Tuple[np.ndarray, np.ndarray]]:
         """All line/ring edges as one (e0, e1) pair of (n,3) arrays —
@@ -890,7 +891,7 @@ def bounds_rect(g: Geography) -> Tuple[float, float, float, float]:
             lng_int = span if lng_int is None else lng_int.union(span)
     # edge bulge: a geodesic edge can reach beyond its endpoint latitudes
     has_edges = False
-    for chain in _edge_chains(parts):
+    for chain in parts.chains():
         has_edges = True
         lngs, lats = [], []
         for x, y, z in chain.tolist():
@@ -928,16 +929,6 @@ def bounds_rect(g: Geography) -> Tuple[float, float, float, float]:
             lat_lo = -90.0
             lng_int = _LngInterval(-180.0, 180.0)
     return (lng_int.lo, lat_lo, lng_int.hi, lat_hi)
-
-
-def _edge_chains(parts: "_Parts") -> List[np.ndarray]:
-    """The vertices of each line (2+ vertices) and of each ring closed
-    by its first vertex: edge k of a chain runs from vertex k to k+1,
-    as in :meth:`_Parts.edges`."""
-    out = [l for l in parts.lines if len(l) >= 2]
-    for rings in parts.polygons:
-        out += [np.concatenate([r, r[:1]]) for r in rings]
-    return out
 
 
 #: slack of the apex screen on the unit tangent's z-component
